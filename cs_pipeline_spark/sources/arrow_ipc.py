@@ -47,13 +47,12 @@ loop).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_ARROW = 4
@@ -409,18 +408,8 @@ def encode_arrow_ipc(i: int) -> bytes:
 
 @_fixture
 def _fx_arrow_ipc(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_arrow_ipc")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_ARROW):
-        p = f"{out_dir}/part-{i:03d}.arrow"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_arrow_ipc(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.arrow" for i in range(_N_ARROW)]
+    write_files(_scratch(sf_dir, "real_arrow_ipc"), names, encode_arrow_ipc)
 
 
 _AR_COLS = ("n_batches n_rows n_cols n_nulls id_sum qx_sum s_chars "
@@ -484,23 +473,10 @@ def scan_arrow_ipc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _AR_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_AR_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_arrow_file(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.arrow")
-        .load(_scratch(sf_dir, "real_arrow_ipc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_arrow_ipc"), "*.arrow",
+        lambda b: [decode_arrow_file(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- the STREAM format (no footer; forward message walk) ----------
@@ -612,18 +588,10 @@ def decode_arrow_stream(payload: bytes) -> dict:
 
 @_fixture
 def _fx_arrow_stream(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_arrow_stream")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_ARROW_STREAM):
-        p = f"{out_dir}/part-{i:03d}.arrows"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_arrow_stream(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.arrows" for i in range(_N_ARROW_STREAM)]
+    write_files(
+        _scratch(sf_dir, "real_arrow_stream"), names, encode_arrow_stream
+    )
 
 
 _STREAM_ORACLE = f"""
@@ -681,20 +649,7 @@ def scan_arrow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _AR_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_AR_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_arrow_stream(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.arrows")
-        .load(_scratch(sf_dir, "real_arrow_stream"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_arrow_stream"), "*.arrows",
+        lambda b: [decode_arrow_stream(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_AVRO = 4
@@ -295,17 +296,8 @@ def decode_avro_ocf(payload: bytes) -> dict:
 
 @_fixture
 def _fx_avro_ocf(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_avro_ocf")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_AVRO):
-        p = f"{out_dir}/part-{i:03d}.avro"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_avro_ocf(i))
-            os.replace(tmp, p)
+    names = [f"part-{i:03d}.avro" for i in range(_N_AVRO)]
+    write_files(_scratch(sf_dir, "real_avro_ocf"), names, encode_avro_ocf)
 
 
 _A_COLS = "n_blocks n_rows n_fields id_sum v_chars qx_sum deflate".split()
@@ -358,23 +350,10 @@ def scan_avro_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _A_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_A_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_avro_ocf(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(_scratch(sf_dir, "real_avro_ocf"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_avro_ocf"), "*.avro",
+        lambda b: [decode_avro_ocf(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- sink: pack documents into REAL Avro OCF shards ----------
@@ -480,13 +459,10 @@ def sink_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = [
             (int(r["doc_id"]), str(r["s"])) for _, r in pdf.iterrows()
         ]
-        payload = encode_avro_rows(rows, shard, shard % 2 == 1)
-        path = f"{out_dir}/docs-{shard:05d}.avro"
-        if not os.path.exists(path):
-            tmp = f"{path}.tmp-{os.getpid()}"
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-            os.replace(tmp, path)
+        write_files(
+            out_dir, [f"docs-{shard:05d}.avro"],
+            lambda _: encode_avro_rows(rows, shard, shard % 2 == 1),
+        )
         return pd.DataFrame({"shard": [shard], "n": [len(rows)]})
 
     os.makedirs(out_dir, exist_ok=True)
@@ -516,8 +492,7 @@ def sink_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "v_chars": m["v_chars"],
                     "deflate": m["deflate"],
                 })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+            yield pd.DataFrame(rows, columns=cols)
 
     return back.select("path", "content").mapInPandas(
         census,
@@ -600,17 +575,8 @@ def encode_avro_evolved(g: int) -> bytes:
 
 @_fixture
 def _fx_avro_evolved(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_avro_evo")
-    os.makedirs(out_dir, exist_ok=True)
-    for g in range(3):
-        p = f"{out_dir}/gen-{g}.avro"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_avro_evolved(g))
-            os.replace(tmp, p)
+    names = [f"gen-{g}.avro" for g in range(3)]
+    write_files(_scratch(sf_dir, "real_avro_evo"), names, encode_avro_evolved)
 
 
 def resolve_avro_evolved(payload: bytes) -> dict:
@@ -703,25 +669,7 @@ def scan_avro_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{c} long" for c in _EVO_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_EVO_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = resolve_avro_evolved(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
-        .load(_scratch(sf_dir, "real_avro_evo"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_avro_evo"), "*.avro",
+        lambda b: [resolve_avro_evolved(b)], schema,
     )

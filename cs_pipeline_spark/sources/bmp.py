@@ -24,13 +24,12 @@ in the worker, one ~9-column row per file leaves it.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_BMPS = 6
@@ -120,25 +119,10 @@ def decode_bmp_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_bmp_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_BMPS):
-        p = f"{out_dir}/img-{i:03d}.bmp"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_bmp(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_bmp_imgs(spark: SparkSession, sf_dir: str) -> None:
-    write_bmp_fixtures(_scratch(sf_dir, "real_bmps"))
+    names = [f"img-{i:03d}.bmp" for i in range(_N_BMPS)]
+    write_files(_scratch(sf_dir, "real_bmps"), names, encode_bmp)
 
 
 _BMP_ORACLE = f"""
@@ -189,20 +173,7 @@ def mm_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _B_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_bmp_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_B_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.bmp")
-        .load(_scratch(sf_dir, "real_bmps"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_bmps"), "*.bmp",
+        lambda b: [decode_bmp_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

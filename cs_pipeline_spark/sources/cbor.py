@@ -37,12 +37,11 @@ markers), files fan out across executors; the msgpack/JSONL reality.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_CBOR = 4
@@ -343,18 +342,8 @@ def decode_cbor_stream(payload: bytes) -> dict:
 
 @_fixture
 def _fx_cbor(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_cbor")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_CBOR):
-        p = f"{out_dir}/part-{i:03d}.cbor"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_cbor_stream(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.cbor" for i in range(_N_CBOR)]
+    write_files(_scratch(sf_dir, "real_cbor"), names, encode_cbor_stream)
 
 
 _CB_COLS = ("n_records id_sum neg_sum s_chars qx_sum arr_items "
@@ -430,20 +419,7 @@ def scan_cbor_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _CB_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_CB_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_cbor_stream(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.cbor")
-        .load(_scratch(sf_dir, "real_cbor"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_cbor"), "*.cbor",
+        lambda b: [decode_cbor_stream(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

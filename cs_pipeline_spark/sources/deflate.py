@@ -44,12 +44,11 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_ZFILES = 4
@@ -354,18 +353,10 @@ def encode_zlib_multistream(i: int) -> bytes:
 
 @_fixture
 def _fx_zlib_streams(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_zlib_streams")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_ZFILES):
-        p = f"{out_dir}/part-{i:03d}.zz"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_zlib_multistream(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.zz" for i in range(_N_ZFILES)]
+    write_files(
+        _scratch(sf_dir, "real_zlib_streams"), names, encode_zlib_multistream
+    )
 
 
 _Z_COLS = ["n_streams", "out_len", "byte_sum", "adler_sum"]
@@ -421,22 +412,7 @@ def scan_deflate_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _Z_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_Z_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_zlib_multistream(bytes(content))
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    **{k: m[k] for k in _Z_COLS},
-                })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zz")
-        .load(_scratch(sf_dir, "real_zlib_streams"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zlib_streams"), "*.zz",
+        lambda b: [decode_zlib_multistream(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _Z85 = (
@@ -219,15 +220,7 @@ def encode_dv_blob(name: str) -> tuple[str, int, int]:
     return z85_encode(blob), size, len(positions)
 
 
-@_fixture
-def _fx_delta_dv(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_delta_dv")
-    os.makedirs(out_dir, exist_ok=True)
-    p = f"{out_dir}/{0:020d}.json"
-    if os.path.exists(p):
-        return
+def _dv_log() -> bytes:
     lines = [json.dumps({
         "protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
                      "readerFeatures": ["deletionVectors"]}
@@ -244,10 +237,15 @@ def _fx_delta_dv(spark: SparkSession, sf_dir: str) -> None:
                 "cardinality": card,
             }
         lines.append(json.dumps({"add": add}))
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, p)
+    return ("\n".join(lines) + "\n").encode()
+
+
+@_fixture
+def _fx_delta_dv(spark: SparkSession, sf_dir: str) -> None:
+    write_files(
+        _scratch(sf_dir, "real_delta_dv"), [f"{0:020d}.json"],
+        lambda _: _dv_log(),
+    )
 
 
 _DV_ORACLE = """

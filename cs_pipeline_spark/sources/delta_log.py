@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_COMMITS = 6
@@ -70,50 +71,42 @@ def _remove_path(c: int) -> str:
     return f"part-{c - 2}-{c % 3}.parquet"
 
 
+def _commit_json(c: int) -> bytes:
+    lines = []
+    if c == 0:
+        lines.append(json.dumps({
+            "protocol": {"minReaderVersion": 1, "minWriterVersion": 2}
+        }))
+        lines.append(json.dumps({
+            "metaData": {"id": "tbl", "format": {"provider": "parquet"}}
+        }))
+    for k in range(_ADDS_PER_COMMIT):
+        path, sz, recs = _add_info(c, k)
+        lines.append(json.dumps({
+            "add": {"path": path, "size": sz, "numRecords": recs,
+                    "modificationTime": _commit_ts_ms(c),
+                    "dataChange": True}
+        }))
+    if c == _READD_COMMIT:
+        lines.append(json.dumps({
+            "add": {"path": _READD_PATH, "size": _READD_SZ,
+                    "numRecords": _READD_RECS,
+                    "modificationTime": _commit_ts_ms(c),
+                    "dataChange": True}
+        }))
+    if c >= 2:
+        lines.append(json.dumps({
+            "remove": {"path": _remove_path(c),
+                       "deletionTimestamp": _commit_ts_ms(c),
+                       "dataChange": True}
+        }))
+    return ("\n".join(lines) + "\n").encode()
+
+
 @_fixture
 def _fx_delta_log(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_delta_log")
-    os.makedirs(out_dir, exist_ok=True)
-    for c in range(_N_COMMITS):
-        p = f"{out_dir}/{c:020d}.json"
-        if os.path.exists(p):
-            continue
-        lines = []
-        if c == 0:
-            lines.append(json.dumps({
-                "protocol": {"minReaderVersion": 1, "minWriterVersion": 2}
-            }))
-            lines.append(json.dumps({
-                "metaData": {"id": "tbl", "format": {"provider": "parquet"}}
-            }))
-        for k in range(_ADDS_PER_COMMIT):
-            path, sz, recs = _add_info(c, k)
-            lines.append(json.dumps({
-                "add": {"path": path, "size": sz, "numRecords": recs,
-                        "modificationTime": _commit_ts_ms(c),
-                        "dataChange": True}
-            }))
-        if c == _READD_COMMIT:
-            lines.append(json.dumps({
-                "add": {"path": _READD_PATH, "size": _READD_SZ,
-                        "numRecords": _READD_RECS,
-                        "modificationTime": _commit_ts_ms(c),
-                        "dataChange": True}
-            }))
-        if c >= 2:
-            lines.append(json.dumps({
-                "remove": {"path": _remove_path(c),
-                           "deletionTimestamp": _commit_ts_ms(c),
-                           "dataChange": True}
-            }))
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-        import os as _os
-
-        _os.replace(tmp, p)
+    names = [f"{c:020d}.json" for c in range(_N_COMMITS)]
+    write_files(_scratch(sf_dir, "real_delta_log"), names, _commit_json)
 
 
 def _read_actions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,12 +29,11 @@ decoded) and only a ~12-column row per file leaves the Python worker.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_FLACS = 8
@@ -196,25 +195,10 @@ def decode_flac_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_flac_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_FLACS):
-        p = f"{out_dir}/clip-{i:03d}.flac"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_flac(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_flac_clips(spark: SparkSession, sf_dir: str) -> None:
-    write_flac_fixtures(_scratch(sf_dir, "real_flacs"))
+    names = [f"clip-{i:03d}.flac" for i in range(_N_FLACS)]
+    write_files(_scratch(sf_dir, "real_flacs"), names, encode_flac)
 
 
 _RATE_SQL = "CASE " + " ".join(
@@ -268,21 +252,7 @@ def mm_decode_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped by length, one row per file out.
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _F_COLS)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_flac_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_F_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.flac")
-        .load(_scratch(sf_dir, "real_flacs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_flacs"), "*.flac",
+        lambda b: [decode_flac_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -32,12 +32,11 @@ reads header-proportional bytes (sub-block SIZES, not pixel content).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_GIFS = 8
@@ -228,25 +227,10 @@ def decode_gif_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_gif_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_GIFS):
-        p = f"{out_dir}/anim-{i:03d}.gif"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_gif(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_gif_anims(spark: SparkSession, sf_dir: str) -> None:
-    write_gif_fixtures(_scratch(sf_dir, "real_gifs"))
+    names = [f"anim-{i:03d}.gif" for i in range(_N_GIFS)]
+    write_files(_scratch(sf_dir, "real_gifs"), names, encode_gif)
 
 
 _G_COLS = (
@@ -302,20 +286,7 @@ def mm_decode_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _G_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_gif_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_G_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_G_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(_scratch(sf_dir, "real_gifs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_gifs"), "*.gif",
+        lambda b: [decode_gif_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -35,13 +35,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.sources.deflate import inflate
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_GZ = 4
@@ -216,18 +215,10 @@ def decode_gzip_members(payload: bytes) -> dict:
 
 @_fixture
 def _fx_gzip_members(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_gzip_members")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_GZ):
-        p = f"{out_dir}/part-{i:03d}.gzm"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_gzip_members(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.gzm" for i in range(_N_GZ)]
+    write_files(
+        _scratch(sf_dir, "real_gzip_members"), names, encode_gzip_members
+    )
 
 
 _GZ_COLS = ("n_members out_len byte_sum name_chars comment_chars "
@@ -297,20 +288,7 @@ def scan_gzip_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _GZ_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_GZ_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_gzip_members(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gzm")
-        .load(_scratch(sf_dir, "real_gzip_members"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_gzip_members"), "*.gzm",
+        lambda b: [decode_gzip_members(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

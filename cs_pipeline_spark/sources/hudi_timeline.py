@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_HUDI_COMMITS = 5  # completed commits, instant idx 0..4
@@ -88,20 +89,12 @@ _REPL_WRITES = [
 
 @_fixture
 def _fx_hudi_timeline(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    hd = os.path.join(_scratch(sf_dir, "real_hudi"), ".hoodie")
-    os.makedirs(hd, exist_ok=True)
+    hd = f"{_scratch(sf_dir, 'real_hudi')}/.hoodie"
 
     def _write(fname: str, obj: dict | None) -> None:
-        p = os.path.join(hd, fname)
-        if os.path.exists(p):
-            return
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            if obj is not None:
-                json.dump(obj, fh)
-        os.replace(tmp, p)
+        write_files(hd, [fname], lambda _: (
+            b"" if obj is None else json.dumps(obj).encode()
+        ))
 
     for c in range(_N_HUDI_COMMITS):
         stats: dict[str, list[dict]] = {}

@@ -32,9 +32,7 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +43,7 @@ from cs_pipeline_spark.sources.avro_ocf import (
     _zz,
     decode_avro_flat,
 )
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_SNAPSHOTS = 4
@@ -125,56 +124,36 @@ def _manifest_rows(k: int) -> list[tuple]:
     return rows
 
 
+def _table_metadata() -> bytes:
+    return json.dumps({
+        "format-version": 2,
+        "table-uuid": "00000000-0000-0000-0000-000000000001",
+        "current-snapshot-id": _snap_id(_N_SNAPSHOTS - 1),
+        "snapshots": [
+            {
+                "snapshot-id": _snap_id(s),
+                "sequence-number": s,
+                "manifest-list": f"snap-{_snap_id(s)}.avro",
+            }
+            for s in range(_N_SNAPSHOTS)
+        ],
+    }).encode()
+
+
 @_fixture
 def _fx_iceberg(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_iceberg")
-    md = os.path.join(out_dir, "metadata")
-    os.makedirs(md, exist_ok=True)
-    for k in range(_N_SNAPSHOTS):
-        p = f"{md}/manifest-{k:04d}.avro"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(
-                    encode_ocf_generic(
-                        _MANIFEST_FIELDS, _manifest_rows(k), 100 + k
-                    )
-                )
-            os.replace(tmp, p)
-    for s in range(_N_SNAPSHOTS):
-        p = f"{md}/snap-{_snap_id(s)}.avro"
-        if not os.path.exists(p):
-            rows = [
-                (f"manifest-{k:04d}.avro", _snap_id(k))
-                for k in range(s + 1)
-            ]
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_ocf_generic(_MLIST_FIELDS, rows, 200 + s))
-            os.replace(tmp, p)
-    p = f"{md}/v1.metadata.json"
-    if not os.path.exists(p):
-        meta = {
-            "format-version": 2,
-            "table-uuid": "00000000-0000-0000-0000-000000000001",
-            "current-snapshot-id": _snap_id(_N_SNAPSHOTS - 1),
-            "snapshots": [
-                {
-                    "snapshot-id": _snap_id(s),
-                    "sequence-number": s,
-                    "manifest-list": f"snap-{_snap_id(s)}.avro",
-                }
-                for s in range(_N_SNAPSHOTS)
-            ],
-        }
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        import os as _os
-
-        _os.replace(tmp, p)
+    md = f"{_scratch(sf_dir, 'real_iceberg')}/metadata"
+    names = [f"manifest-{k:04d}.avro" for k in range(_N_SNAPSHOTS)]
+    write_files(md, names, lambda k: encode_ocf_generic(
+        _MANIFEST_FIELDS, _manifest_rows(k), 100 + k
+    ))
+    names = [f"snap-{_snap_id(s)}.avro" for s in range(_N_SNAPSHOTS)]
+    write_files(md, names, lambda s: encode_ocf_generic(
+        _MLIST_FIELDS,
+        [(f"manifest-{k:04d}.avro", _snap_id(k)) for k in range(s + 1)],
+        200 + s,
+    ))
+    write_files(md, ["v1.metadata.json"], lambda _: _table_metadata())
 
 
 _ICEBERG_ORACLE = f"""
@@ -217,25 +196,16 @@ _ICEBERG_ORACLE = f"""
 """
 
 
-def _decode_rows_batches(
-    it: Iterator[pd.DataFrame], cols: list[str]
-) -> Iterator[pd.DataFrame]:
-    """binaryFile batches → one row per decoded Avro record, with the
-    source fname prepended."""
-    for pdf in it:
-        out: list[dict] = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            fname = path.rsplit("/", 1)[-1]
-            names, rows = decode_avro_flat(bytes(content))
-            for r in rows:
-                d = dict(zip(names, r))
-                d["fname"] = fname
-                out.append(d)
-        yield (
-            pd.DataFrame(out, columns=cols)
-            if out
-            else pd.DataFrame({k: [] for k in cols})
-        )
+def _avro_records(payload: bytes) -> list[dict]:
+    """One row per decoded Avro record."""
+    names, rows = decode_avro_flat(payload)
+    return [dict(zip(names, r)) for r in rows]
+
+
+_MANIFEST_SCHEMA = (
+    "fname string, status long, seq long, file_path string, "
+    "file_size long, record_count long"
+)
 
 
 @register(
@@ -282,34 +252,13 @@ def scan_iceberg_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    mlists = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "snap-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it, ["fname", "manifest_path", "added_snapshot_id"]
-            ),
-            schema="fname string, manifest_path string, "
-            "added_snapshot_id long",
-        )
+    mlists = decode_files(
+        spark, md, "snap-*.avro", _avro_records,
+        "fname string, manifest_path string, added_snapshot_id long",
     )
 
-    manifests = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "manifest-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it,
-                ["fname", "status", "seq", "file_path",
-                 "file_size", "record_count"],
-            ),
-            schema="fname string, status long, seq long, "
-            "file_path string, file_size long, record_count long",
-        )
+    manifests = decode_files(
+        spark, md, "manifest-*.avro", _avro_records, _MANIFEST_SCHEMA
     )
 
     # snapshot -> manifest fname map (metadata-sized, broadcast)
@@ -368,18 +317,7 @@ def _orphan_info(m: int) -> tuple[str, int]:
     return (f"data/orphan-{m}.parquet", 500 + 10 * m)
 
 
-@_fixture
-def _fx_iceberg_listing(spark: SparkSession, sf_dir: str) -> None:
-    """Object-store listing fixture: every path any manifest
-    references (data files, including later-deleted ones) plus
-    planted orphans from aborted writes."""
-    import os
-
-    md = _scratch(sf_dir, "real_iceberg")
-    os.makedirs(md, exist_ok=True)
-    p = os.path.join(md, "listing.jsonl")
-    if os.path.exists(p):
-        return
+def _listing_jsonl() -> bytes:
     lines = []
     seen = set()
     for k in range(_N_SNAPSHOTS):
@@ -391,10 +329,18 @@ def _fx_iceberg_listing(spark: SparkSession, sf_dir: str) -> None:
     for m in range(_N_ORPHANS):
         path, sz = _orphan_info(m)
         lines.append(json.dumps({"path": path, "size": sz}))
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, p)
+    return ("\n".join(lines) + "\n").encode()
+
+
+@_fixture
+def _fx_iceberg_listing(spark: SparkSession, sf_dir: str) -> None:
+    """Object-store listing fixture: every path any manifest
+    references (data files, including later-deleted ones) plus
+    planted orphans from aborted writes."""
+    write_files(
+        _scratch(sf_dir, "real_iceberg"), ["listing.jsonl"],
+        lambda _: _listing_jsonl(),
+    )
 
 
 _ORPHAN_ORACLE = f"""
@@ -436,20 +382,9 @@ def lake_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(md)
         .select("path", F.col("size").cast("long").alias("size_bytes"))
     )
-    manifests = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "manifest-*.avro")
-        .load(os.path.join(md, "metadata"))
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it,
-                ["fname", "status", "seq", "file_path",
-                 "file_size", "record_count"],
-            ),
-            schema="fname string, status long, seq long, "
-            "file_path string, file_size long, record_count long",
-        )
+    manifests = decode_files(
+        spark, os.path.join(md, "metadata"), "manifest-*.avro",
+        _avro_records, _MANIFEST_SCHEMA,
     )
     referenced = manifests.select(
         F.col("file_path").alias("path")
@@ -501,33 +436,18 @@ _DEL_MANIFEST_FIELDS = [
 
 @_fixture
 def _fx_iceberg_deletes(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
     base = _scratch(sf_dir, "real_iceberg")
-    dd = os.path.join(base, "deletes")
-    md = os.path.join(base, "metadata")
-    os.makedirs(dd, exist_ok=True)
-    os.makedirs(md, exist_ok=True)
-    man_rows = []
-    for d, seq, rows in _DELETE_FILES:
-        fname = f"del-{d}.avro"
-        man_rows.append((seq, fname, len(rows)))
-        p = os.path.join(dd, fname)
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(
-                    encode_ocf_generic(_DEL_FILE_FIELDS, rows, 300 + d)
-                )
-            os.replace(tmp, p)
-    p = os.path.join(md, "delete-manifest-0000.avro")
-    if not os.path.exists(p):
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(
-                encode_ocf_generic(_DEL_MANIFEST_FIELDS, man_rows, 400)
-            )
-        os.replace(tmp, p)
+    names = [f"del-{d}.avro" for d, _seq, _rows in _DELETE_FILES]
+    write_files(f"{base}/deletes", names, lambda k: encode_ocf_generic(
+        _DEL_FILE_FIELDS, _DELETE_FILES[k][2], 300 + _DELETE_FILES[k][0]
+    ))
+    man_rows = [
+        (seq, f"del-{d}.avro", len(rows)) for d, seq, rows in _DELETE_FILES
+    ]
+    write_files(
+        f"{base}/metadata", ["delete-manifest-0000.avro"],
+        lambda _: encode_ocf_generic(_DEL_MANIFEST_FIELDS, man_rows, 400),
+    )
 
 
 def _del_rows_sql() -> str:
@@ -615,20 +535,8 @@ def scan_iceberg_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch(sf_dir, "real_iceberg")
     md = os.path.join(base, "metadata")
 
-    manifests = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "manifest-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it,
-                ["fname", "status", "seq", "file_path",
-                 "file_size", "record_count"],
-            ),
-            schema="fname string, status long, seq long, "
-            "file_path string, file_size long, record_count long",
-        )
+    manifests = decode_files(
+        spark, md, "manifest-*.avro", _avro_records, _MANIFEST_SCHEMA
     )
     live = (
         manifests.groupBy("file_path")
@@ -642,30 +550,18 @@ def scan_iceberg_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     del_manifest = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "delete-manifest-*.avro")
-        .load(md)
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it, ["fname", "seq", "delete_file", "record_count"]
-            ),
-            schema="fname string, seq long, delete_file string, "
+        decode_files(
+            spark, md, "delete-manifest-*.avro", _avro_records,
+            "fname string, seq long, delete_file string, "
             "record_count long",
         )
         .select(F.col("delete_file").alias("dfname"),
                 F.col("seq").alias("del_seq"))
     )
     del_rows = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "del-*.avro")
-        .load(os.path.join(base, "deletes"))
-        .select("path", "content")
-        .mapInPandas(
-            lambda it: _decode_rows_batches(
-                it, ["fname", "file_path", "pos"]
-            ),
-            schema="fname string, file_path string, pos long",
+        decode_files(
+            spark, os.path.join(base, "deletes"), "del-*.avro",
+            _avro_records, "fname string, file_path string, pos long",
         )
         .join(F.broadcast(del_manifest),
               F.col("fname") == F.col("dfname"))

@@ -26,12 +26,11 @@ header prefix (S3 range requests in a real deployment) — the plan
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_IMGS = 8
@@ -239,25 +238,10 @@ def _exif_orientation(tiff: bytes) -> int:
 # ---------- fixtures + registered op ----------
 
 
-def write_jpeg_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_IMGS):
-        p = f"{out_dir}/img-{i:03d}.jpg"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_jpeg(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_jpeg_imgs(spark: SparkSession, sf_dir: str) -> None:
-    write_jpeg_fixtures(_scratch(sf_dir, "real_jpegs"))
+    names = [f"img-{i:03d}.jpg" for i in range(_N_IMGS)]
+    write_files(_scratch(sf_dir, "real_jpegs"), names, encode_jpeg)
 
 
 _COLS = (
@@ -269,25 +253,10 @@ _COLS = (
 def decode_jpeg_df(spark: SparkSession, jpg_dir: str) -> DataFrame:
     schema = "fname string, " + ", ".join(f"{c} long" for c in _COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_jpeg_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_COLS]
-            ) if rows else pd.DataFrame(
-                {k: [] for k in ["fname", *_COLS]}
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(jpg_dir)
+    return decode_files(
+        spark, jpg_dir, "*.jpg",
+        lambda b: [decode_jpeg_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 _JPEG_ORACLE = f"""
@@ -614,25 +583,10 @@ def decode_jpeg_dc(payload: bytes) -> dict:
     raise ValueError("malformed JPEG: no SOS scan found")
 
 
-def write_jpeg_dc_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_DC_IMGS):
-        p = f"{out_dir}/dc-{i:03d}.jpg"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_jpeg_dc(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_jpeg_dc_imgs(spark: SparkSession, sf_dir: str) -> None:
-    write_jpeg_dc_fixtures(_scratch(sf_dir, "real_jpegs_dc"))
+    names = [f"dc-{i:03d}.jpg" for i in range(_N_DC_IMGS)]
+    write_files(_scratch(sf_dir, "real_jpegs_dc"), names, encode_jpeg_dc)
 
 
 _DC_COLS = (
@@ -695,23 +649,10 @@ def mm_decode_jpeg_dc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _DC_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_jpeg_dc(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_DC_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_DC_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(_scratch(sf_dir, "real_jpegs_dc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_jpegs_dc"), "*.jpg",
+        lambda b: [decode_jpeg_dc(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- EXIF GPS sub-IFD parse (location-PII detection) ----------
@@ -899,25 +840,10 @@ def decode_jpeg_gps(payload: bytes) -> dict:
             "orientation": 0}
 
 
-def write_jpeg_gps_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_GPS_IMGS):
-        p = f"{out_dir}/gps-{i:03d}.jpg"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_jpeg_gps(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_jpeg_gps_imgs(spark: SparkSession, sf_dir: str) -> None:
-    write_jpeg_gps_fixtures(_scratch(sf_dir, "real_jpegs_gps"))
+    names = [f"gps-{i:03d}.jpg" for i in range(_N_GPS_IMGS)]
+    write_files(_scratch(sf_dir, "real_jpegs_gps"), names, encode_jpeg_gps)
 
 
 _GPS_COLS = "has_gps lat_udeg lon_udeg orientation".split()
@@ -982,20 +908,7 @@ def mm_exif_gps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orientation long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_jpeg_gps(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_GPS_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_GPS_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.jpg")
-        .load(_scratch(sf_dir, "real_jpegs_gps"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_jpegs_gps"), "*.jpg",
+        lambda b: [decode_jpeg_gps(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

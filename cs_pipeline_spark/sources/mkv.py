@@ -32,10 +32,10 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_MKV = 4
@@ -157,17 +157,8 @@ def encode_mkv(i: int) -> bytes:
 
 @_fixture
 def _fx_mkv(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_mkv")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_MKV):
-        p = f"{out_dir}/clip-{i:03d}.mkv"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mkv(i))
-            os.replace(tmp, p)
+    names = [f"clip-{i:03d}.mkv" for i in range(_N_MKV)]
+    write_files(_scratch(sf_dir, "real_mkv"), names, encode_mkv)
 
 
 # ---------- reader ----------
@@ -398,30 +389,7 @@ def mm_decode_mkv_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sample_hz long, channels long, duration_ms long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "fname", "track_number", "track_type", "codec_id",
-            "pixel_w", "pixel_h", "sample_hz", "channels",
-            "duration_ms",
-        ]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for t in decode_mkv_meta(bytes(content)):
-                    t["fname"] = fname
-                    rows.append(t)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mkv")
-        .load(_scratch(sf_dir, "real_mkv"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mkv"), "*.mkv",
+        decode_mkv_meta, schema,
     )

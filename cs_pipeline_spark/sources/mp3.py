@@ -27,12 +27,11 @@ frames, not bytes — and one ~8-column row per file leaves the worker.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_MP3S = 8
@@ -170,25 +169,10 @@ def decode_mp3_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_mp3_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_MP3S):
-        p = f"{out_dir}/track-{i:03d}.mp3"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mp3(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_mp3_tracks(spark: SparkSession, sf_dir: str) -> None:
-    write_mp3_fixtures(_scratch(sf_dir, "real_mp3s"))
+    names = [f"track-{i:03d}.mp3" for i in range(_N_MP3S)]
+    write_files(_scratch(sf_dir, "real_mp3s"), names, encode_mp3)
 
 
 _BR_SQL = "CASE 1 + ((f * 3 + i) % 9) " + " ".join(
@@ -246,23 +230,10 @@ def mm_decode_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _P_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp3_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_P_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp3")
-        .load(_scratch(sf_dir, "real_mp3s"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp3s"), "*.mp3",
+        lambda b: [decode_mp3_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -390,17 +361,8 @@ _ID3_ORACLE = f"""
 
 @_fixture
 def _fx_mp3_id3(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_mp3_id3")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(6):
-        p = f"{out_dir}/id3-{i:03d}.mp3"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mp3_id3(i))
-            os.replace(tmp, p)
+    names = [f"id3-{i:03d}.mp3" for i in range(6)]
+    write_files(_scratch(sf_dir, "real_mp3_id3"), names, encode_mp3_id3)
 
 
 @register(
@@ -428,30 +390,18 @@ def mm_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fname string, title string, artist string, album string, "
         "year_ long, n_frames long"
     )
-    cols = ["fname", "title", "artist", "album", "year_", "n_frames"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp3_id3(bytes(content))
-                t = m["tags"]
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    "title": t.get("TIT2"),
-                    "artist": t.get("TPE1"),
-                    "album": t.get("TALB"),
-                    "year_": int(t["TYER"]) if "TYER" in t else None,
-                    "n_frames": m["n_frames"],
-                })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+    def id3_row(payload: bytes) -> list[dict]:
+        m = decode_mp3_id3(payload)
+        t = m["tags"]
+        return [{
+            "title": t.get("TIT2"),
+            "artist": t.get("TPE1"),
+            "album": t.get("TALB"),
+            "year_": int(t["TYER"]) if "TYER" in t else None,
+            "n_frames": m["n_frames"],
+        }]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp3")
-        .load(_scratch(sf_dir, "real_mp3_id3"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp3_id3"), "*.mp3", id3_row, schema
     )

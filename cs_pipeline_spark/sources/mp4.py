@@ -34,13 +34,12 @@ production probers avoid touching the media payload at all.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_MP4S = 8
@@ -317,25 +316,10 @@ def decode_mp4_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered ops ----------
 
 
-def write_mp4_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_MP4S):
-        p = f"{out_dir}/clip-{i:03d}.mp4"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mp4(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_mp4_clips(spark: SparkSession, sf_dir: str) -> None:
-    write_mp4_fixtures(_scratch(sf_dir, "real_mp4s_v2"))
+    names = [f"clip-{i:03d}.mp4" for i in range(_N_MP4S)]
+    write_files(_scratch(sf_dir, "real_mp4s_v2"), names, encode_mp4)
 
 
 _MP4_FORMULA = f"""
@@ -366,23 +350,10 @@ def decode_mp4_df(spark: SparkSession, fdir: str) -> DataFrame:
     schema = "fname string, major_brand string, video_codec string, " + \
         ", ".join(f"{c} long" for c in _M_INT_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp4_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_M_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(fdir)
+    return decode_files(
+        spark, fdir, "*.mp4",
+        lambda b: [decode_mp4_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 @register(
@@ -526,25 +497,10 @@ def decode_mp4_gop(payload: bytes) -> tuple[list[int], list[int]]:
     return keys, sizes
 
 
-def write_mp4_gop_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_GOPS):
-        p = f"{out_dir}/gclip-{i:03d}.mp4"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mp4_gop(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_mp4_gops(spark: SparkSession, sf_dir: str) -> None:
-    write_mp4_gop_fixtures(_scratch(sf_dir, "real_mp4s_gop"))
+    names = [f"gclip-{i:03d}.mp4" for i in range(_N_GOPS)]
+    write_files(_scratch(sf_dir, "real_mp4s_gop"), names, encode_mp4_gop)
 
 
 _GOP_ORACLE = f"""
@@ -599,33 +555,17 @@ def mm_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "fname string, s long, size long, is_key long"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                keys, sizes = decode_mp4_gop(bytes(content))
-                kset = set(keys)
-                fname = path.rsplit("/", 1)[-1]
-                for s, sz in enumerate(sizes, start=1):
-                    rows.append(
-                        {
-                            "fname": fname,
-                            "s": s,
-                            "size": sz,
-                            "is_key": 1 if s in kset else 0,
-                        }
-                    )
-            cols = ["fname", "s", "size", "is_key"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+    def sample_rows(payload: bytes) -> list[dict]:
+        keys, sizes = decode_mp4_gop(payload)
+        kset = set(keys)
+        return [
+            {"s": s, "size": sz, "is_key": 1 if s in kset else 0}
+            for s, sz in enumerate(sizes, start=1)
+        ]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_gop"))
-    )
-    samples = bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    samples = decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_gop"), "*.mp4", sample_rows,
+        schema,
     )
     w = (
         Window.partitionBy("fname")
@@ -868,17 +808,8 @@ def decode_mp4_keyframe_pixels(payload: bytes) -> list[dict]:
 
 @_fixture
 def _fx_mp4_mjpeg(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_mp4s_mjpeg")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_MJPEGS):
-        p = f"{out_dir}/vid-{i:03d}.mp4"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mp4_mjpeg(i))
-            os.replace(tmp, p)
+    names = [f"vid-{i:03d}.mp4" for i in range(_N_MJPEGS)]
+    write_files(_scratch(sf_dir, "real_mp4s_mjpeg"), names, encode_mp4_mjpeg)
 
 
 _MJPEG_ORACLE = f"""
@@ -947,23 +878,10 @@ def mm_video_keyframe_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mean_sum", "mean_min", "mean_max", "is_blank",
     ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in decode_mp4_keyframe_pixels(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_mjpeg"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_mjpeg"), "*.mp4",
+        decode_mp4_keyframe_pixels, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -1293,17 +1211,8 @@ def decode_mp4_sps_meta(payload: bytes) -> dict:
 
 @_fixture
 def _fx_mp4_avc(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_mp4s_avc")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_AVC):
-        p = f"{out_dir}/avc-{i:03d}.mp4"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mp4_avc(i))
-            os.replace(tmp, p)
+    names = [f"avc-{i:03d}.mp4" for i in range(_N_AVC)]
+    write_files(_scratch(sf_dir, "real_mp4s_avc"), names, encode_mp4_avc)
 
 
 _SPS_ORACLE = f"""
@@ -1356,22 +1265,10 @@ def mm_video_sps_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["fname", "profile_idc", "level_idc", "width", "height",
             "n_sps", "length_size"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp4_sps_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_avc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_avc"), "*.mp4",
+        lambda b: [decode_mp4_sps_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -1614,17 +1511,8 @@ def decode_mp4_hevc_meta(payload: bytes) -> dict:
 
 @_fixture
 def _fx_mp4_hevc(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_mp4s_hevc")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_HEVC):
-        p = f"{out_dir}/hevc-{i:03d}.mp4"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_mp4_hevc(i))
-            os.replace(tmp, p)
+    names = [f"hevc-{i:03d}.mp4" for i in range(_N_HEVC)]
+    write_files(_scratch(sf_dir, "real_mp4s_hevc"), names, encode_mp4_hevc)
 
 
 _HEVC_ORACLE = f"""
@@ -1680,19 +1568,7 @@ def mm_video_hevc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["fname", "tier_flag", "profile_idc", "level_idc",
             "width", "height", "bit_depth", "length_size"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_mp4_hevc_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.mp4")
-        .load(_scratch(sf_dir, "real_mp4s_hevc"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_mp4s_hevc"), "*.mp4",
+        lambda b: [decode_mp4_hevc_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

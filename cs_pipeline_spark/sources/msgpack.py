@@ -31,12 +31,11 @@ across executors; the Fluentd/Kafka-archive reality at 100 TB.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_MSGPACK = 4
@@ -321,18 +320,8 @@ def decode_msgpack_stream(payload: bytes) -> dict:
 
 @_fixture
 def _fx_msgpack(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_msgpack")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_MSGPACK):
-        p = f"{out_dir}/part-{i:03d}.msgpack"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_msgpack_stream(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.msgpack" for i in range(_N_MSGPACK)]
+    write_files(_scratch(sf_dir, "real_msgpack"), names, encode_msgpack_stream)
 
 
 _MP_COLS = ("n_records id_sum neg_sum s_chars qx_sum tag_items "
@@ -399,20 +388,7 @@ def scan_msgpack_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _MP_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_MP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_msgpack_stream(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.msgpack")
-        .load(_scratch(sf_dir, "real_msgpack"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_msgpack"), "*.msgpack",
+        lambda b: [decode_msgpack_stream(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

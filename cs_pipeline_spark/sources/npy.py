@@ -29,13 +29,12 @@ from __future__ import annotations
 
 import ast
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_NPYS = 6
@@ -156,25 +155,10 @@ def decode_npy_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_npy_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_NPYS):
-        p = f"{out_dir}/feat-{i:03d}.npy"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_npy(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_npy_feats(spark: SparkSession, sf_dir: str) -> None:
-    write_npy_fixtures(_scratch(sf_dir, "real_npys"))
+    names = [f"feat-{i:03d}.npy" for i in range(_N_NPYS)]
+    write_files(_scratch(sf_dir, "real_npys"), names, encode_npy)
 
 
 _NPY_ORACLE = f"""
@@ -232,20 +216,7 @@ def scan_npy_header(spark: SparkSession, sf_dir: str) -> DataFrame:
         "val_max long, checksum long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_npy_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_N_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.npy")
-        .load(_scratch(sf_dir, "real_npys"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_npys"), "*.npy",
+        lambda b: [decode_npy_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

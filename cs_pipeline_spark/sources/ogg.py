@@ -32,12 +32,11 @@ throughput beats integrity).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_OGGS = 6
@@ -214,25 +213,10 @@ def decode_ogg_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_ogg_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_OGGS):
-        p = f"{out_dir}/voice-{i:03d}.opus"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_ogg(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_ogg_voices(spark: SparkSession, sf_dir: str) -> None:
-    write_ogg_fixtures(_scratch(sf_dir, "real_oggs"))
+    names = [f"voice-{i:03d}.opus" for i in range(_N_OGGS)]
+    write_files(_scratch(sf_dir, "real_oggs"), names, encode_ogg)
 
 
 _RATE_SQL = "CASE a.i " + " ".join(
@@ -289,20 +273,7 @@ def mm_decode_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _O_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_ogg_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_O_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.opus")
-        .load(_scratch(sf_dir, "real_oggs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_oggs"), "*.opus",
+        lambda b: [decode_ogg_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

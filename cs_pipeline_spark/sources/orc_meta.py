@@ -319,11 +319,7 @@ def scan_orc_postscript(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "rows_match": d["rows_match"],
                     "compression_kind": d["compression_kind"],
                 })
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
+            yield pd.DataFrame(rows, columns=cols)
 
     bf = (
         spark.read.format("binaryFile")
@@ -486,11 +482,7 @@ def scan_orc_col_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                         st["col_id"], f"col{st['col_id']}"
                     )
                     rows.append(st)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
+            yield pd.DataFrame(rows, columns=cols)
 
     bf = (
         spark.read.format("binaryFile")

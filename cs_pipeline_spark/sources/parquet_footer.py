@@ -31,12 +31,11 @@ production property that lets a 100 TB lake audit run in minutes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_PQ = 4
@@ -274,17 +273,10 @@ def decode_parquet_footer(payload: bytes) -> list[dict]:
 
 @_fixture
 def _fx_parquet_tbls(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_parquet_tbls")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_PQ):
-        p = f"{out_dir}/tbl-{i:03d}.parquet"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_parquet_tbl(i))
-            os.replace(tmp, p)
+    names = [f"tbl-{i:03d}.parquet" for i in range(_N_PQ)]
+    write_files(
+        _scratch(sf_dir, "real_parquet_tbls"), names, encode_parquet_tbl
+    )
 
 
 _PQ_ORACLE = f"""
@@ -336,20 +328,7 @@ def scan_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_snappy_chunks",
     ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in decode_parquet_footer(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "tbl-*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "tbl-*.parquet",
+        decode_parquet_footer, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

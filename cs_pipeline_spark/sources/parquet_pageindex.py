@@ -25,9 +25,7 @@ no shuffle. Malformed input raises ValueError only
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
@@ -41,6 +39,7 @@ from cs_pipeline_spark.sources.parquet_pages import (
     _read_strlist,
     _read_struct_h,
 )
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_PIDX = 4
@@ -84,17 +83,10 @@ def encode_parquet_pageidx(i: int) -> bytes:
 
 @_fixture
 def _fx_parquet_pageidx(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_parquet_pageidx")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_PIDX):
-        p = f"{out_dir}/pidx-{i:03d}.parquet"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_parquet_pageidx(i))
-            os.replace(tmp, p)
+    names = [f"pidx-{i:03d}.parquet" for i in range(_N_PIDX)]
+    write_files(
+        _scratch(sf_dir, "real_parquet_pageidx"), names, encode_parquet_pageidx
+    )
 
 
 # ---------- thrift handlers (parquet.thrift PageIndex structs) ----------
@@ -292,26 +284,7 @@ def scan_parquet_page_index(
         f"{c} long" for c in _PI_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "col", *_PI_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for m in decode_parquet_page_index(bytes(content)):
-                    m["fname"] = fname
-                    rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_pageidx"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_pageidx"), "*.parquet",
+        decode_parquet_page_index, schema,
     )

@@ -29,9 +29,7 @@ Malformed input raises ValueError only (tests/test_parser_fuzz.py).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
@@ -44,6 +42,7 @@ from cs_pipeline_spark.sources.parquet_footer import (
     _read_i,
     _read_list_of_structs,
 )
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 
@@ -514,6 +513,13 @@ _PP_ORACLE = f"""
 """
 
 
+def _with_rows_match(m: dict) -> list[dict]:
+    """One page-census row, flagged 1 when the decoded row count
+    matches the footer's."""
+    m["rows_match"] = 1 if m["rows_decoded"] == m["rows_footer"] else 0
+    return [m]
+
+
 @register(
     "scan_parquet_data_pages",
     _PP_ORACLE,
@@ -544,30 +550,9 @@ def scan_parquet_data_pages(
         f"{c} long" for c in _PP_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_PP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_parquet_column_pages(bytes(content))
-                m["rows_match"] = (
-                    1 if m["rows_decoded"] == m["rows_footer"] else 0
-                )
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "*.parquet",
+        lambda b: _with_rows_match(decode_parquet_column_pages(b)), schema,
     )
 
 
@@ -702,28 +687,9 @@ def scan_parquet_col_stats(
         f"{c} long" for c in _ST_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_ST_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for m in decode_parquet_col_stats(bytes(content)):
-                    m["fname"] = fname
-                    rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "*.parquet",
+        decode_parquet_col_stats, schema,
     )
 
 
@@ -779,30 +745,9 @@ def scan_parquet_string_pages(
         f"{c} long" for c in _SP_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_SP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_parquet_string_pages(bytes(content))
-                m["rows_match"] = (
-                    1 if m["rows_decoded"] == m["rows_footer"] else 0
-                )
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_tbls"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_tbls"), "*.parquet",
+        lambda b: _with_rows_match(decode_parquet_string_pages(b)), schema,
     )
 
 
@@ -840,17 +785,10 @@ def encode_parquet_lz4(i: int) -> bytes:
 
 @_fixture
 def _fx_parquet_lz4(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_parquet_lz4")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_LZ4):
-        p = f"{out_dir}/lz4-{i:03d}.parquet"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_parquet_lz4(i))
-            os.replace(tmp, p)
+    names = [f"lz4-{i:03d}.parquet" for i in range(_N_LZ4)]
+    write_files(
+        _scratch(sf_dir, "real_parquet_lz4"), names, encode_parquet_lz4
+    )
 
 
 _LZ_ORACLE = f"""
@@ -897,28 +835,7 @@ def scan_parquet_lz4_pages(
         f"{c} long" for c in _PP_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_PP_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_parquet_column_pages(bytes(content))
-                m["rows_match"] = (
-                    1 if m["rows_decoded"] == m["rows_footer"] else 0
-                )
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.parquet")
-        .load(_scratch(sf_dir, "real_parquet_lz4"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_parquet_lz4"), "*.parquet",
+        lambda b: _with_rows_match(decode_parquet_column_pages(b)), schema,
     )

@@ -30,12 +30,11 @@ reads per document regardless of document size.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_PDFS = 8
@@ -214,25 +213,10 @@ def decode_pdf_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_pdf_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_PDFS):
-        p = f"{out_dir}/doc-{i:03d}.pdf"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_pdf(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_pdf_docs(spark: SparkSession, sf_dir: str) -> None:
-    write_pdf_fixtures(_scratch(sf_dir, "real_pdfs"))
+    names = [f"doc-{i:03d}.pdf" for i in range(_N_PDFS)]
+    write_files(_scratch(sf_dir, "real_pdfs"), names, encode_pdf)
 
 
 _PDF_ORACLE = f"""
@@ -280,23 +264,10 @@ def mm_decode_pdf_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _P_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_pdf_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_P_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(_scratch(sf_dir, "real_pdfs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_pdfs"), "*.pdf",
+        lambda b: [decode_pdf_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -635,17 +606,8 @@ def _content_stream(payload: bytes, coff: int) -> bytes:
 
 @_fixture
 def _fx_pdf_text_docs(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_pdfs_text")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_TPDF):
-        p = f"{out_dir}/text-{i:03d}.pdf"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_pdf_text(i))
-            os.replace(tmp, p)
+    names = [f"text-{i:03d}.pdf" for i in range(_N_TPDF)]
+    write_files(_scratch(sf_dir, "real_pdfs_text"), names, encode_pdf_text)
 
 
 _TEXT_PDF_ORACLE = f"""
@@ -707,21 +669,7 @@ def text_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_kern_spaces long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "page", "text", "n_chars", "n_kern_spaces"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in extract_pdf_text(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(_scratch(sf_dir, "real_pdfs_text"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_pdfs_text"), "*.pdf",
+        extract_pdf_text, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -25,13 +25,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _SIG = b"\x89PNG\r\n\x1a\n"
@@ -192,36 +191,21 @@ def _img_pixel(i: int, y: int, x: int, c: int) -> int:
     return (y * 31 + x * 17 + c * 11 + i * 7) % 256
 
 
-def write_png_fixtures(out_dir: str) -> list[str]:
-    """Materialize the 6 PNG fixtures (idempotent, tmp+rename)."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_IMGS):
-        p = f"{out_dir}/img-{i:03d}.png"
-        if not os.path.exists(p):
-            w, h, ch = _img_dims(i)
-            pix = [
-                _img_pixel(i, y, x, c)
-                for y in range(h)
-                for x in range(w)
-                for c in range(ch)
-            ]
-            payload = encode_png(
-                w, h, ch, pix, filters=[(y + i) % 5 for y in range(h)]
-            )
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
+def _png_fixture(i: int) -> bytes:
+    w, h, ch = _img_dims(i)
+    pix = [
+        _img_pixel(i, y, x, c)
+        for y in range(h)
+        for x in range(w)
+        for c in range(ch)
+    ]
+    return encode_png(w, h, ch, pix, filters=[(y + i) % 5 for y in range(h)])
 
 
 @_fixture
 def _fx_png_imgs(spark: SparkSession, sf_dir: str) -> None:
-    write_png_fixtures(_scratch(sf_dir, "real_pngs"))
+    names = [f"img-{i:03d}.png" for i in range(_N_IMGS)]
+    write_files(_scratch(sf_dir, "real_pngs"), names, _png_fixture)
 
 
 def decode_png_df(spark: SparkSession, png_dir: str) -> DataFrame:
@@ -232,44 +216,15 @@ def decode_png_df(spark: SparkSession, png_dir: str) -> DataFrame:
         "y long, x long, c long, v long"
     )
 
-    def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                w, h, ch, vals = decode_png(bytes(content))
-                fname = path.rsplit("/", 1)[-1]
-                n = h * w * ch
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "fname": fname,
-                            "width": w,
-                            "height": h,
-                            "channels": ch,
-                            "y": [k // (w * ch) for k in range(n)],
-                            "x": [(k // ch) % w for k in range(n)],
-                            "c": [k % ch for k in range(n)],
-                            "v": vals,
-                        }
-                    )
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {
-                    k: []
-                    for k in (
-                        "fname width height channels y x c v".split()
-                    )
-                }
-            )
+    def pixels(payload: bytes) -> list[dict]:
+        w, h, ch, vals = decode_png(payload)
+        return [
+            {"width": w, "height": h, "channels": ch,
+             "y": k // (w * ch), "x": (k // ch) % w, "c": k % ch, "v": v}
+            for k, v in enumerate(vals)
+        ]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(png_dir)
-    )
-    return bf.select("path", "content").mapInPandas(
-        decode_batches, schema=schema
-    )
+    return decode_files(spark, png_dir, "*.png", pixels, schema)
 
 
 _PNG_ORACLE = f"""
@@ -453,40 +408,30 @@ def mm_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cs_pipeline_spark.registry import pin
 
-    def dhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            names: list[str] = []
-            dhs: list[int] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                w, h, ch, vals = decode_png(bytes(content))
-                a = np.asarray(vals, dtype=np.int64).reshape(h, w, ch)
-                if ch == 1:
-                    lum = a[:, :, 0]
-                else:
-                    wts = np.array([299, 587, 114], dtype=np.int64)
-                    lum = (a * wts).sum(axis=2) // 1000
-                ys = (np.arange(_DH_G) * h) // _DH_G
-                xs = (np.arange(_DH_G) * w) // _DH_G
-                ls = lum[np.ix_(ys, xs)]
-                bits = (ls[:, 1:] > ls[:, :-1]).astype(np.int64)
-                sh = (
-                    np.arange(_DH_G)[:, None] * (_DH_G - 1)
-                    + np.arange(_DH_G - 1)[None, :]
-                )
-                names.append(path.rsplit("/", 1)[-1])
-                dhs.append(int((bits << sh).sum()))
-            yield pd.DataFrame({"fname": names, "dh": dhs})
+    def dhash(payload: bytes) -> list[dict]:
+        w, h, ch, vals = decode_png(payload)
+        a = np.asarray(vals, dtype=np.int64).reshape(h, w, ch)
+        if ch == 1:
+            lum = a[:, :, 0]
+        else:
+            wts = np.array([299, 587, 114], dtype=np.int64)
+            lum = (a * wts).sum(axis=2) // 1000
+        ys = (np.arange(_DH_G) * h) // _DH_G
+        xs = (np.arange(_DH_G) * w) // _DH_G
+        ls = lum[np.ix_(ys, xs)]
+        bits = (ls[:, 1:] > ls[:, :-1]).astype(np.int64)
+        sh = (
+            np.arange(_DH_G)[:, None] * (_DH_G - 1)
+            + np.arange(_DH_G - 1)[None, :]
+        )
+        return [{"dh": int((bits << sh).sum())}]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(_scratch(sf_dir, "real_pngs"))
-    )
     # pinned: both sides of the bounded self-join read this 6-row
     # frame — without the pin the decode map executes twice per action
     hashes = pin(
-        bf.select("path", "content").mapInPandas(
-            dhash_batches, schema="fname string, dh long"
+        decode_files(
+            spark, _scratch(sf_dir, "real_pngs"), "*.png", dhash,
+            "fname string, dh long",
         )
     )
     a = hashes.select(
@@ -660,17 +605,8 @@ _PROV_ORACLE = f"""
 
 @_fixture
 def _fx_png_prov(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_png_prov")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(8):
-        p = f"{out_dir}/prov-{i:03d}.png"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_png_text(i))
-            os.replace(tmp, p)
+    names = [f"prov-{i:03d}.png" for i in range(8)]
+    write_files(_scratch(sf_dir, "real_png_prov"), names, encode_png_text)
 
 
 @register(
@@ -699,39 +635,23 @@ def mm_png_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fname string, n_text long, n_ztxt long, n_itxt long, "
         "ai_generated long, text_chars long, keywords string"
     )
-    cols = ["fname", "n_text", "n_ztxt", "n_itxt", "ai_generated",
-            "text_chars", "keywords"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                texts = decode_png_text(bytes(content))
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    "n_text": sum(1 for t in texts
-                                  if t["kind"] == "tEXt"),
-                    "n_ztxt": sum(1 for t in texts
-                                  if t["kind"] == "zTXt"),
-                    "n_itxt": sum(1 for t in texts
-                                  if t["kind"] == "iTXt"),
-                    "ai_generated": 1 if any(
-                        t["keyword"] == "parameters"
-                        and "Steps:" in t["text"] for t in texts
-                    ) else 0,
-                    "text_chars": sum(len(t["text"]) for t in texts),
-                    "keywords": ",".join(
-                        sorted(t["keyword"] for t in texts)
-                    ),
-                })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+    def provenance(payload: bytes) -> list[dict]:
+        texts = decode_png_text(payload)
+        kinds = [t["kind"] for t in texts]
+        return [{
+            "n_text": kinds.count("tEXt"),
+            "n_ztxt": kinds.count("zTXt"),
+            "n_itxt": kinds.count("iTXt"),
+            "ai_generated": 1 if any(
+                t["keyword"] == "parameters" and "Steps:" in t["text"]
+                for t in texts
+            ) else 0,
+            "text_chars": sum(len(t["text"]) for t in texts),
+            "keywords": ",".join(sorted(t["keyword"] for t in texts)),
+        }]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(_scratch(sf_dir, "real_png_prov"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_png_prov"), "*.png", provenance,
+        schema,
     )

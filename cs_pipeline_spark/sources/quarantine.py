@@ -23,14 +23,13 @@ queue a production ingest writes to a side table.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.sources.gif import decode_gif_meta, encode_gif
 from cs_pipeline_spark.sources.mp3 import decode_mp3_meta, encode_mp3
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_Q = 8  # per format; odd indices are corrupted
@@ -45,26 +44,14 @@ def _q_payload(fmt: str, i: int) -> bytes:
     return raw
 
 
-def write_quarantine_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for fmt, ext in (("gif", "gif"), ("mp3", "mp3")):
-        for i in range(_N_Q):
-            p = f"{out_dir}/q-{fmt}-{i:03d}.{ext}"
-            if not os.path.exists(p):
-                tmp = p + ".tmp"
-                with open(tmp, "wb") as fh:
-                    fh.write(_q_payload(fmt, i))
-                os.replace(tmp, p)
-            paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_quarantine(spark: SparkSession, sf_dir: str) -> None:
-    write_quarantine_fixtures(_scratch(sf_dir, "real_quarantine"))
+    files = [(fmt, i) for fmt in ("gif", "mp3") for i in range(_N_Q)]
+    write_files(
+        _scratch(sf_dir, "real_quarantine"),
+        [f"q-{fmt}-{i:03d}.{fmt}" for fmt, i in files],
+        lambda k: _q_payload(*files[k]),
+    )
 
 
 _Q_ORACLE = f"""
@@ -106,40 +93,21 @@ def mm_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "format string, n_files long, n_ok long, n_quarantined long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        stats: dict[str, list[int]] = {}
-        for pdf in it:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                fmt = "gif" if fname.endswith(".gif") else "mp3"
-                s = stats.setdefault(fmt, [0, 0, 0])
-                s[0] += 1
-                try:
-                    if fmt == "gif":
-                        decode_gif_meta(bytes(content))
-                    else:
-                        decode_mp3_meta(bytes(content))
-                    s[1] += 1
-                except ValueError:
-                    s[2] += 1
-        rows = [
-            {"format": k, "n_files": v[0], "n_ok": v[1],
-             "n_quarantined": v[2]}
-            for k, v in stats.items()
-        ]
-        cols = ["format", "n_files", "n_ok", "n_quarantined"]
-        yield pd.DataFrame(rows, columns=cols) if rows else \
-            pd.DataFrame({k: [] for k in cols})
+    def census(payload: bytes) -> list[dict]:
+        # both formats keep their magic: corruption truncates the tail
+        fmt = "gif" if payload[:3] == b"GIF" else "mp3"
+        try:
+            (decode_gif_meta if fmt == "gif" else decode_mp3_meta)(payload)
+            ok = 1
+        except ValueError:
+            ok = 0
+        return [{"format": fmt, "n_files": 1, "n_ok": ok,
+                 "n_quarantined": 1 - ok}]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "q-*")
-        .load(_scratch(sf_dir, "real_quarantine"))
+    partial = decode_files(
+        spark, _scratch(sf_dir, "real_quarantine"), "q-*", census, schema
     )
-    partial = bf.select("path", "content").mapInPandas(
-        batches, schema=schema
-    )
-    # partitions emit partial censuses — merge to per-format totals
+    # one census row per file — merge to per-format totals
     from pyspark.sql import functions as F
 
     return partial.groupBy("format").agg(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_ROBOTS = 6
@@ -64,25 +65,13 @@ def encode_robots(i: int) -> str:
     return "\n".join(out) + "\n"
 
 
-def write_robots_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_ROBOTS):
-        p = f"{out_dir}/host-{i:03d}.robots.txt"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(encode_robots(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_robots(spark: SparkSession, sf_dir: str) -> None:
-    write_robots_fixtures(_scratch(sf_dir, "real_robots"))
+    names = [f"host-{i:03d}.robots.txt" for i in range(_N_ROBOTS)]
+    write_files(
+        _scratch(sf_dir, "real_robots"), names,
+        lambda i: encode_robots(i).encode(),
+    )
 
 
 _ROBOTS_ORACLE = f"""

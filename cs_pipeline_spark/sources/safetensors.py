@@ -32,12 +32,11 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_STS = 6
@@ -159,25 +158,12 @@ def decode_safetensors_meta(payload: bytes) -> list[dict]:
 # ---------- fixtures + registered op ----------
 
 
-def write_st_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_STS):
-        p = f"{out_dir}/ckpt-{i:03d}.safetensors"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_safetensors(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_st_ckpts(spark: SparkSession, sf_dir: str) -> None:
-    write_st_fixtures(_scratch(sf_dir, "real_safetensors"))
+    names = [f"ckpt-{i:03d}.safetensors" for i in range(_N_STS)]
+    write_files(
+        _scratch(sf_dir, "real_safetensors"), names, encode_safetensors
+    )
 
 
 _WIDTH_SQL = "CASE dtype " + " ".join(
@@ -236,22 +222,7 @@ def scan_safetensors_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "params long, bytes long, offset long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for t in decode_safetensors_meta(bytes(content)):
-                    t["fname"] = fname
-                    rows.append(t)
-            cols = ["fname", "name", "dtype", "rank", "params",
-                    "bytes", "offset"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.safetensors")
-        .load(_scratch(sf_dir, "real_safetensors"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_safetensors"), "*.safetensors",
+        decode_safetensors_meta, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

@@ -49,10 +49,10 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_SQLITE = 4
@@ -310,18 +310,8 @@ def encode_sqlite_db(i: int) -> bytes:
 
 @_fixture
 def _fx_sqlite_db(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_sqlite_db")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_SQLITE):
-        p = f"{out_dir}/part-{i:03d}.db"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_sqlite_db(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.db" for i in range(_N_SQLITE)]
+    write_files(_scratch(sf_dir, "real_sqlite_db"), names, encode_sqlite_db)
 
 
 _SQ_COLS = ("page_size n_tables n_rows id_sum s_chars qx_sum "
@@ -387,20 +377,7 @@ def scan_sqlite_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _SQ_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_SQ_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_sqlite_db(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.db")
-        .load(_scratch(sf_dir, "real_sqlite_db"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_sqlite_db"), "*.db",
+        lambda b: [decode_sqlite_db(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

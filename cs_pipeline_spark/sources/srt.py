@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_SRTS = 6
@@ -72,25 +73,12 @@ def encode_srt(f: int) -> str:
     return "\n\n".join(blocks) + "\n"
 
 
-def write_srt_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for f in range(_N_SRTS):
-        p = f"{out_dir}/cap-{f:03d}.srt"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(encode_srt(f))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_srt_caps(spark: SparkSession, sf_dir: str) -> None:
-    write_srt_fixtures(_scratch(sf_dir, "real_srts"))
+    names = [f"cap-{f:03d}.srt" for f in range(_N_SRTS)]
+    write_files(
+        _scratch(sf_dir, "real_srts"), names, lambda f: encode_srt(f).encode()
+    )
 
 
 # n_chars counts the text glyphs (line chars, no newlines); the

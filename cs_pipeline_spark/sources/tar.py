@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_TARS = 6
@@ -151,25 +152,10 @@ def decode_tar_members(payload: bytes) -> list[dict]:
 # ---------- fixtures + registered op ----------
 
 
-def write_tar_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_TARS):
-        p = f"{out_dir}/shard-{i:03d}.tar"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_tar(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_tar_shards(spark: SparkSession, sf_dir: str) -> None:
-    write_tar_fixtures(_scratch(sf_dir, "real_tars"))
+    names = [f"shard-{i:03d}.tar" for i in range(_N_TARS)]
+    write_files(_scratch(sf_dir, "real_tars"), names, encode_tar)
 
 
 _TAR_ORACLE = f"""
@@ -227,29 +213,13 @@ def scan_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional reads, (member, offset) index rows out.
     """
     schema = (
-        "shard string, name string, size long, data_blocks long, "
+        "fname string, name string, size long, data_blocks long, "
         "offset_blocks long"
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                shard = path.rsplit("/", 1)[-1]
-                for m in decode_tar_members(bytes(content)):
-                    m["shard"] = shard
-                    rows.append(m)
-            cols = ["shard", "name", "size", "data_blocks",
-                    "offset_blocks"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(_scratch(sf_dir, "real_tars"))
-    )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
+    return decode_files(
+        spark, _scratch(sf_dir, "real_tars"), "*.tar", decode_tar_members,
+        schema,
+    ).withColumnRenamed("fname", "shard")
 
 
 # ---------- WebDataset sample assembly over the member index ----------
@@ -372,21 +342,19 @@ def sink_wds_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
-        pdf = pdf.sort_values("doc_id")
-        out = bytearray()
-        for _, row in pdf.iterrows():
-            body = str(row["s"]).encode("utf-8")
-            out += _header(f"doc-{int(row['doc_id']):06d}.txt", len(body))
-            out += body
-            if len(body) % 512:
-                out += b"\x00" * (512 - len(body) % 512)
-        out += b"\x00" * 1024
-        path = f"{out_dir}/wds-{shard:05d}.tar"
-        if not os.path.exists(path):
-            tmp = f"{path}.tmp-{os.getpid()}"
-            with open(tmp, "wb") as fh:
-                fh.write(bytes(out))
-            os.replace(tmp, path)
+
+        def encode(_k: int) -> bytes:
+            out = bytearray()
+            for _, row in pdf.sort_values("doc_id").iterrows():
+                body = str(row["s"]).encode("utf-8")
+                out += _header(f"doc-{int(row['doc_id']):06d}.txt", len(body))
+                out += body
+                if len(body) % 512:
+                    out += b"\x00" * (512 - len(body) % 512)
+            out += b"\x00" * 1024
+            return bytes(out)
+
+        write_files(out_dir, [f"wds-{shard:05d}.tar"], encode)
         return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
 
     os.makedirs(out_dir, exist_ok=True)
@@ -418,8 +386,7 @@ def sink_wds_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             cols = ["shard", "n_members", "payload_bytes",
                     "max_member_bytes"]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+            yield pd.DataFrame(rows, columns=cols)
 
     return back.select("path", "content").mapInPandas(
         census,

@@ -32,12 +32,11 @@ integrity check IS the point; skip it for header-only probes).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_TFRS = 6
@@ -133,25 +132,10 @@ def decode_tfrecord_meta(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_tfrecord_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_TFRS):
-        p = f"{out_dir}/train-{i:03d}.tfrecord"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_tfrecord(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_tfrecords(spark: SparkSession, sf_dir: str) -> None:
-    write_tfrecord_fixtures(_scratch(sf_dir, "real_tfrecords"))
+    names = [f"train-{i:03d}.tfrecord" for i in range(_N_TFRS)]
+    write_files(_scratch(sf_dir, "real_tfrecords"), names, encode_tfrecord)
 
 
 _TFR_ORACLE = f"""
@@ -191,20 +175,7 @@ def scan_tfrecord_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _T_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_tfrecord_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_T_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tfrecord")
-        .load(_scratch(sf_dir, "real_tfrecords"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_tfrecords"), "*.tfrecord",
+        lambda b: [decode_tfrecord_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

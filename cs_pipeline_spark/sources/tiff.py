@@ -29,13 +29,12 @@ linear in executors, no shuffle until the caller aggregates.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 # TIFF field types → byte widths (TIFF 6.0 §2)
@@ -190,33 +189,17 @@ def _fixture_cell(m: int, y: int, x: int) -> float:
     return ((y * 53 + x * 19 + m * 7) % 1024) / 32.0
 
 
+def _raster_tiff(m: int) -> bytes:
+    vals = [_fixture_cell(m, y, x) for y in range(_RT_H) for x in range(_RT_W)]
+    # month 2 is big-endian: the reader must not care
+    return encode_tiff_f32(_RT_W, _RT_H, vals, big_endian=(m == 2))
+
+
 def write_raster_fixtures(out_dir: str) -> list[str]:
     """Materialize the 3 monthly TIFF fixtures (idempotent)."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for m, stamp in _RT_MONTH_STAMPS.items():
-        p = f"{out_dir}/wtd-v1-{stamp}.tif"
-        if not os.path.exists(p):
-            vals = [
-                _fixture_cell(m, y, x)
-                for y in range(_RT_H)
-                for x in range(_RT_W)
-            ]
-            # encode FIRST, write via rename: a crash mid-encode must
-            # never leave a half-written file the idempotence check
-            # would later mistake for a finished fixture
-            payload = encode_tiff_f32(
-                # month 2 is big-endian: the reader must not care
-                _RT_W, _RT_H, vals, big_endian=(m == 2)
-            )
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(payload)
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
+    months = list(_RT_MONTH_STAMPS)
+    names = [f"wtd-v1-{_RT_MONTH_STAMPS[m]}.tif" for m in months]
+    return write_files(out_dir, names, lambda k: _raster_tiff(months[k]))
 
 
 @_fixture
@@ -232,36 +215,14 @@ def decode_raster_df(spark: SparkSession, tif_dir: str) -> DataFrame:
     machine-local path) is carried out for the time stamp."""
     schema = "fname string, y_idx long, x_idx long, wtd double"
 
-    def decode_batches(
-        it: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                h, w, vals = decode_raster(bytes(content))
-                fname = path.rsplit("/", 1)[-1]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "fname": fname,
-                            "y_idx": [i // w for i in range(h * w)],
-                            "x_idx": [i % w for i in range(h * w)],
-                            "wtd": vals,
-                        }
-                    )
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                {"fname": [], "y_idx": [], "x_idx": [], "wtd": []}
-            )
+    def cells(payload: bytes) -> list[dict]:
+        _h, w, vals = decode_raster(payload)
+        return [
+            {"y_idx": i // w, "x_idx": i % w, "wtd": v}
+            for i, v in enumerate(vals)
+        ]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tif")
-        .load(tif_dir)
-    )
-    return bf.select("path", "content").mapInPandas(
-        decode_batches, schema=schema
-    )
+    return decode_files(spark, tif_dir, "*.tif", cells, schema)
 
 
 _RT_ORACLE = f"""

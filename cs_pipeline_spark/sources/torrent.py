@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_TORRENT = 4
@@ -228,23 +229,11 @@ def encode_torrent(i: int) -> bytes:
 
 @_fixture
 def _fx_torrent(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
     out_dir = _scratch(sf_dir, "real_torrent")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_TORRENT):
-        pt = f"{out_dir}/payload-{i:03d}.bin"
-        if not os.path.exists(pt):
-            tmp = pt + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(_payload_bytes(i))
-            os.replace(tmp, pt)
-        mt = f"{out_dir}/part-{i:03d}.torrent"
-        if not os.path.exists(mt):
-            tmp = mt + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_torrent(i))
-            os.replace(tmp, mt)
+    names = [f"payload-{i:03d}.bin" for i in range(_N_TORRENT)]
+    write_files(out_dir, names, _payload_bytes)
+    names = [f"part-{i:03d}.torrent" for i in range(_N_TORRENT)]
+    write_files(out_dir, names, encode_torrent)
 
 
 _TO_COLS = ("n_pieces pieces_ok length length_match name_chars "
@@ -329,8 +318,7 @@ def scan_torrent_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 m = decode_torrent(bytes(mb), bytes(pb))
                 m["fname"] = fname
                 rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+            yield pd.DataFrame(rows, columns=cols)
 
     return joined.select(
         "fname", "meta_bytes", "payload_bytes"

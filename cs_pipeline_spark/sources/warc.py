@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_WARCS = 6
@@ -216,25 +217,10 @@ def decode_warc_records(payload: bytes) -> dict:
 # ---------- fixtures + registered op ----------
 
 
-def write_warc_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_WARCS):
-        p = f"{out_dir}/crawl-{i:03d}.warc"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_warc(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_warc_crawls(spark: SparkSession, sf_dir: str) -> None:
-    write_warc_fixtures(_scratch(sf_dir, "real_warcs"))
+    names = [f"crawl-{i:03d}.warc" for i in range(_N_WARCS)]
+    write_files(_scratch(sf_dir, "real_warcs"), names, encode_warc)
 
 
 _WARC_ORACLE = f"""
@@ -295,23 +281,10 @@ def scan_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _W_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_warc_records(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            cols = ["fname", *_W_COLS]
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc")
-        .load(_scratch(sf_dir, "real_warcs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_warcs"), "*.warc",
+        lambda b: [decode_warc_records(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -372,18 +345,14 @@ def encode_warc_gz(i: int) -> bytes:
 def _fx_warc_gz_crawls(spark: SparkSession, sf_dir: str) -> None:
     """Mixed shard directory: even i plain .warc, odd i per-record
     gzip .warc.gz — the walker must handle both transparently."""
-    import os
-
-    out_dir = _scratch(sf_dir, "real_warcs_gz")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_GZWARCS):
-        gz = i % 2 == 1
-        p = f"{out_dir}/mix-{i:03d}.warc" + (".gz" if gz else "")
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_warc_gz(i) if gz else encode_warc(i))
-            os.replace(tmp, p)
+    names = [
+        f"mix-{i:03d}.warc" + (".gz" if i % 2 == 1 else "")
+        for i in range(_N_GZWARCS)
+    ]
+    write_files(
+        _scratch(sf_dir, "real_warcs_gz"), names,
+        lambda i: encode_warc_gz(i) if i % 2 == 1 else encode_warc(i),
+    )
 
 
 _WARC_GZ_ORACLE = f"""
@@ -448,23 +417,10 @@ def scan_warc_gz_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_gzip_members"]
     schema = "fname string, " + ", ".join(f"{c} long" for c in cols)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_cols = ["fname", *cols]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_warc_records(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in out_cols})
-            yield pd.DataFrame(rows, columns=out_cols) if rows else \
-                pd.DataFrame({k: [] for k in out_cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "mix-*.warc*")
-        .load(_scratch(sf_dir, "real_warcs_gz"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_warcs_gz"), "mix-*.warc*",
+        lambda b: [decode_warc_records(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ====================================================================
@@ -475,24 +431,11 @@ def scan_warc_gz_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ====================================================================
 
 
-@_fixture
-def _fx_warc_cdx(spark: SparkSession, sf_dir: str) -> None:
-    """CDXJ-style index over the gzip shards of the mixed fixture
-    dir: one JSON line per RESPONSE record with (filename, offset,
-    length, url) — written at indexing time from the member
-    boundaries, exactly like CommonCrawl's cdx-00xxx files."""
+def _cdx_lines() -> bytes:
     import json
-    import os
 
-    out_dir = _scratch(sf_dir, "real_warcs_gz")
-    os.makedirs(out_dir, exist_ok=True)
-    p = f"{out_dir}/ranged.cdx"
-    if os.path.exists(p):
-        return
     lines = []
-    for i in range(_N_GZWARCS):
-        if i % 2 != 1:
-            continue  # CDX covers the gzip shards
+    for i in range(1, _N_GZWARCS, 2):  # CDX covers the gzip shards
         fname = f"mix-{i:03d}.warc.gz"
         off = 0
         for rtype, url, blob in _warc_gz_members(i):
@@ -502,10 +445,19 @@ def _fx_warc_cdx(spark: SparkSession, sf_dir: str) -> None:
                     "length": len(blob), "url": url,
                 }))
             off += len(blob)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    os.replace(tmp, p)
+    return ("\n".join(lines) + "\n").encode()
+
+
+@_fixture
+def _fx_warc_cdx(spark: SparkSession, sf_dir: str) -> None:
+    """CDXJ-style index over the gzip shards of the mixed fixture
+    dir: one JSON line per RESPONSE record with (filename, offset,
+    length, url) — written at indexing time from the member
+    boundaries, exactly like CommonCrawl's cdx-00xxx files."""
+    write_files(
+        _scratch(sf_dir, "real_warcs_gz"), ["ranged.cdx"],
+        lambda _: _cdx_lines(),
+    )
 
 
 def fetch_cdx_member(shard: bytes, offset: int, length: int,
@@ -620,8 +572,7 @@ def scan_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "status": m["status"],
                         "body_bytes": m["body_bytes"],
                     })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+            yield pd.DataFrame(rows, columns=cols)
 
     fdir = _scratch(sf_dir, "real_warcs_gz")
     cdx = spark.read.option("pathGlobFilter", "*.cdx").json(fdir)

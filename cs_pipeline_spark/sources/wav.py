@@ -32,14 +32,13 @@ chunk plan (``mm_audio_chunk_decoded``) with per-chunk decode.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_WAVS = 8
@@ -187,47 +186,19 @@ def decode_wav(payload: bytes) -> dict:
 # ---------- fixtures + registered ops ----------
 
 
-def write_wav_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_WAVS):
-        p = f"{out_dir}/clip-{i:03d}.wav"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_wav(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_wav_clips(spark: SparkSession, sf_dir: str) -> None:
-    write_wav_fixtures(_scratch(sf_dir, "real_wavs"))
+    names = [f"clip-{i:03d}.wav" for i in range(_N_WAVS)]
+    write_files(_scratch(sf_dir, "real_wavs"), names, encode_wav)
 
 
 def decode_wav_df(spark: SparkSession, wav_dir: str) -> DataFrame:
     schema = "fname string, " + ", ".join(f"{c} long" for c in _STAT_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_wav(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_STAT_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_STAT_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(wav_dir)
+    return decode_files(
+        spark, wav_dir, "*.wav",
+        lambda b: [decode_wav(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # formula meta, shared by both oracles
@@ -440,25 +411,10 @@ def decode_wav_frames(payload: bytes) -> list[dict]:
     return rows
 
 
-def write_wav_energy_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_EWAVS):
-        p = f"{out_dir}/eclip-{i:03d}.wav"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_wav_energy(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_wav_energy(spark: SparkSession, sf_dir: str) -> None:
-    write_wav_energy_fixtures(_scratch(sf_dir, "real_wavs_energy"))
+    names = [f"eclip-{i:03d}.wav" for i in range(_N_EWAVS)]
+    write_files(_scratch(sf_dir, "real_wavs_energy"), names, encode_wav_energy)
 
 
 _E_COLS = "frame_idx n_samples energy zcr peak is_silence".split()
@@ -527,25 +483,10 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _E_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows = decode_wav_frames(bytes(content))
-                fname = path.rsplit("/", 1)[-1]
-                for r in rows:
-                    r["fname"] = fname
-                frames.extend(rows)
-            yield pd.DataFrame(
-                frames, columns=["fname", *_E_COLS]
-            ) if frames else pd.DataFrame({k: [] for k in ["fname", *_E_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(_scratch(sf_dir, "real_wavs_energy"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_wavs_energy"), "*.wav",
+        decode_wav_frames, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)
 
 
 # ---------- silence-run census / trim points over decoded PCM ----------
@@ -600,25 +541,12 @@ def encode_wav_silence(i: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
-def write_wav_silence_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_SWAVS):
-        p = f"{out_dir}/sclip-{i:03d}.wav"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_wav_silence(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_wav_silence(spark: SparkSession, sf_dir: str) -> None:
-    write_wav_silence_fixtures(_scratch(sf_dir, "real_wavs_silence"))
+    names = [f"sclip-{i:03d}.wav" for i in range(_N_SWAVS)]
+    write_files(
+        _scratch(sf_dir, "real_wavs_silence"), names, encode_wav_silence
+    )
 
 
 _S_COLS = (
@@ -702,29 +630,11 @@ def mm_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = "fname string, frame_idx long, is_silence long"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in decode_wav_frames(bytes(content)):
-                    frames.append(
-                        {
-                            "fname": fname,
-                            "frame_idx": r["frame_idx"],
-                            "is_silence": r["is_silence"],
-                        }
-                    )
-            cols = ["fname", "frame_idx", "is_silence"]
-            yield pd.DataFrame(frames, columns=cols) if frames else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(_scratch(sf_dir, "real_wavs_silence"))
+    # decode_files keeps only the schema's keys of each frame row
+    flags = decode_files(
+        spark, _scratch(sf_dir, "real_wavs_silence"), "*.wav",
+        decode_wav_frames, schema,
     )
-    flags = bf.select("path", "content").mapInPandas(batches, schema=schema)
     tot = flags.groupBy("fname").agg(
         F.count("*").alias("n_windows"),
         F.sum("is_silence").alias("silent_windows"),
@@ -925,21 +835,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "e_b64 double, centroid double"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "frame", "e_b4", "e_b16", "e_b64", "centroid"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for r in wav_spectral_rows(bytes(content)):
-                    r["fname"] = fname
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(_scratch(sf_dir, "real_wavs"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_wavs"), "*.wav",
+        wav_spectral_rows, schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

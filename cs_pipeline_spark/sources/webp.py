@@ -25,12 +25,11 @@ Scale: per-file mapInPandas header parse; one row per file out.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 from cs_pipeline_spark.sources.wav import _chunk
 
@@ -157,25 +156,10 @@ def decode_webp_meta(payload: bytes) -> dict:
     return meta
 
 
-def write_webp_fixtures(out_dir: str) -> list[str]:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for i in range(_N_WEBPS):
-        p = f"{out_dir}/pic-{i:03d}.webp"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_webp(i))
-            os.replace(tmp, p)
-        paths.append(p)
-    return paths
-
-
 @_fixture
 def _fx_webp_pics(spark: SparkSession, sf_dir: str) -> None:
-    write_webp_fixtures(_scratch(sf_dir, "real_webps"))
+    names = [f"pic-{i:03d}.webp" for i in range(_N_WEBPS)]
+    write_files(_scratch(sf_dir, "real_webps"), names, encode_webp)
 
 
 _W_COLS = "format width height has_alpha has_anim n_chunks".split()
@@ -230,20 +214,7 @@ def mm_decode_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_alpha long, has_anim long, n_chunks long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_webp_meta(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(
-                rows, columns=["fname", *_W_COLS]
-            ) if rows else pd.DataFrame({k: [] for k in ["fname", *_W_COLS]})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.webp")
-        .load(_scratch(sf_dir, "real_webps"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_webps"), "*.webp",
+        lambda b: [decode_webp_meta(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

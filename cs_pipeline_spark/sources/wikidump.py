@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_DUMPS = 4
@@ -157,23 +158,14 @@ def decode_wikidump_pages(shard: bytes) -> list[tuple[int, bytes]]:
 
 @_fixture
 def _fx_wikidumps(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
     out_dir = _scratch(sf_dir, "real_wikidumps")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_DUMPS):
-        p = f"{out_dir}/dump-{i:03d}.xml.bz2"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_wikidump(i))
-            os.replace(tmp, p)
-        idx = f"{out_dir}/dump-{i:03d}-index.txt"
-        if not os.path.exists(idx):
-            tmp = idx + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write("\n".join(_dump_index_lines(i)) + "\n")
-            os.replace(tmp, idx)
+    names = [f"dump-{i:03d}.xml.bz2" for i in range(_N_DUMPS)]
+    write_files(out_dir, names, encode_wikidump)
+    names = [f"dump-{i:03d}-index.txt" for i in range(_N_DUMPS)]
+    write_files(
+        out_dir, names,
+        lambda i: ("\n".join(_dump_index_lines(i)) + "\n").encode(),
+    )
 
 
 # SQL twin of _page_text's length (quotes doubled for the literal)
@@ -264,8 +256,7 @@ def scan_bz2_multistream(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "max_pid": max(pids),
                         "text_chars": sum(len(t) for _, t in pages),
                     })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
+            yield pd.DataFrame(rows, columns=cols)
 
     fdir = _scratch(sf_dir, "real_wikidumps")
     idx = (
@@ -350,28 +341,13 @@ def text_wiki_markup_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, pid long, wikitext string"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "pid", "wikitext"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                fname = path.rsplit("/", 1)[-1]
-                for pid, text in decode_wikidump_pages(bytes(content)):
-                    rows.append({
-                        "fname": fname,
-                        "pid": pid,
-                        "wikitext": text.decode(),
-                    })
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml.bz2")
-        .load(_scratch(sf_dir, "real_wikidumps"))
-    )
-    pages = bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    pages = decode_files(
+        spark, _scratch(sf_dir, "real_wikidumps"), "*.xml.bz2",
+        lambda b: [
+            {"pid": pid, "wikitext": text.decode()}
+            for pid, text in decode_wikidump_pages(b)
+        ],
+        schema,
     )
     plain = F.regexp_replace(
         F.regexp_replace(

@@ -42,12 +42,11 @@ import hashlib
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_XZ = 4
@@ -305,18 +304,10 @@ def encode_xz_multistream(i: int) -> bytes:
 
 @_fixture
 def _fx_xz_container(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_xz_container")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_XZ):
-        p = f"{out_dir}/part-{i:03d}.xz"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_xz_multistream(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.xz" for i in range(_N_XZ)]
+    write_files(
+        _scratch(sf_dir, "real_xz_container"), names, encode_xz_multistream
+    )
 
 
 _XZ_COLS = ("n_streams n_blocks out_len byte_sum n_crc32 n_crc64 "
@@ -380,20 +371,7 @@ def scan_xz_container(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _XZ_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_XZ_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_xz_container(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xz")
-        .load(_scratch(sf_dir, "real_xz_container"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_xz_container"), "*.xz",
+        lambda b: [decode_xz_container(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

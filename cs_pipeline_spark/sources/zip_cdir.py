@@ -41,13 +41,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
 from cs_pipeline_spark.sources.deflate import inflate
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_ZIP = 4
@@ -187,18 +186,8 @@ def decode_zip_cdir(payload: bytes) -> dict:
 
 @_fixture
 def _fx_zip_cdir(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_zip_cdir")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_ZIP):
-        p = f"{out_dir}/part-{i:03d}.zip"
-        if os.path.exists(p):
-            continue
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(encode_zip_archive(i))
-        os.replace(tmp, p)
+    names = [f"part-{i:03d}.zip" for i in range(_N_ZIP)]
+    write_files(_scratch(sf_dir, "real_zip_cdir"), names, encode_zip_archive)
 
 
 _ZC_COLS = ("n_members n_stored n_deflated out_len byte_sum crc_ok "
@@ -263,20 +252,7 @@ def scan_zip_central_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     schema = "fname string, " + ", ".join(f"{c} long" for c in _ZC_COLS)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_ZC_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_zip_cdir(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append({k: m[k] for k in cols})
-            yield pd.DataFrame(rows, columns=cols) if rows else \
-                pd.DataFrame({k: [] for k in cols})
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zip")
-        .load(_scratch(sf_dir, "real_zip_cdir"))
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zip_cdir"), "*.zip",
+        lambda b: [decode_zip_cdir(b)], schema,
     )
-    return bf.select("path", "content").mapInPandas(batches, schema=schema)

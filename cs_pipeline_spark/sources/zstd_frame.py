@@ -27,12 +27,11 @@ random access needed. Malformed input raises ValueError only
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.sources.binfiles import decode_files, write_files
 from cs_pipeline_spark.sources.scans import _fixture, _scratch
 
 _N_ZST = 4
@@ -88,17 +87,8 @@ def encode_zstd_frame(i: int) -> bytes:
 
 @_fixture
 def _fx_zstd_frames(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_zstd")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_ZST):
-        p = f"{out_dir}/doc-{i:03d}.zst"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_zstd_frame(i))
-            os.replace(tmp, p)
+    names = [f"doc-{i:03d}.zst" for i in range(_N_ZST)]
+    write_files(_scratch(sf_dir, "real_zstd"), names, encode_zstd_frame)
 
 
 def decode_zstd_frame(payload: bytes) -> dict:
@@ -250,27 +240,9 @@ def scan_zstd_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{c} long" for c in _ZS_COLS
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", *_ZS_COLS]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                m = decode_zstd_frame(bytes(content))
-                m["fname"] = path.rsplit("/", 1)[-1]
-                rows.append(m)
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
-
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zst")
-        .load(_scratch(sf_dir, "real_zstd"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zstd"), "*.zst",
+        lambda b: [decode_zstd_frame(b)], schema,
     )
 
 
@@ -384,17 +356,8 @@ def encode_zstd_frame_ck(i: int) -> bytes:
 
 @_fixture
 def _fx_zstd_ck(spark: SparkSession, sf_dir: str) -> None:
-    import os
-
-    out_dir = _scratch(sf_dir, "real_zstd_ck")
-    os.makedirs(out_dir, exist_ok=True)
-    for i in range(_N_ZCK):
-        p = f"{out_dir}/ck-{i:03d}.zst"
-        if not os.path.exists(p):
-            tmp = p + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(encode_zstd_frame_ck(i))
-            os.replace(tmp, p)
+    names = [f"ck-{i:03d}.zst" for i in range(_N_ZCK)]
+    write_files(_scratch(sf_dir, "real_zstd_ck"), names, encode_zstd_frame_ck)
 
 
 def _zck_literals() -> list[tuple[int, int, int, int]]:
@@ -448,34 +411,12 @@ def scan_zstd_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "xxh_low32 long, checksum_ok long"
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["fname", "content_size", "byte_mass", "xxh_low32",
-                "checksum_ok"]
-        for pdf in it:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                payload = bytes(content)
-                m = decode_zstd_frame(payload)
-                if not m.get("has_checksum"):
-                    raise ValueError("zstd: checksum frame expected")
-                rows.append({
-                    "fname": path.rsplit("/", 1)[-1],
-                    "content_size": m["content_size"],
-                    "byte_mass": m["byte_mass"],
-                    "xxh_low32": m["xxh_low32"],
-                    "checksum_ok": m["checksum_ok"],
-                })
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({k: [] for k in cols})
-            )
+    def checked(payload: bytes) -> list[dict]:
+        m = decode_zstd_frame(payload)
+        if not m.get("has_checksum"):
+            raise ValueError("zstd: checksum frame expected")
+        return [m]
 
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.zst")
-        .load(_scratch(sf_dir, "real_zstd_ck"))
-    )
-    return bf.select("path", "content").mapInPandas(
-        batches, schema=schema
+    return decode_files(
+        spark, _scratch(sf_dir, "real_zstd_ck"), "*.zst", checked, schema
     )
