@@ -43,8 +43,12 @@ explicit cast). Spark's Column path promotes exactly.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from cs_pipeline_spark.registry import fan_out
 
 Q1 = 1000000.0  # quantum⁻¹ for first moments (6 dp)
 Q2 = 1000000000000.0  # Q1² for second moments
@@ -563,6 +567,28 @@ def _values_rows(rows, schema):
             return None
         out.append("(" + ", ".join(cells) + ")")
     return ", ".join(out)
+
+
+def agg_report(spark, sf_dir, blocks) -> list[tuple]:
+    """Funnel-report rows from concurrent 1-row aggregates: each block
+    is ``(builder, [(label, metric, Column), ...])``; the builder is
+    called as ``builder(spark, sf_dir)`` INSIDE its ``fan_out`` worker
+    (plan construction overlaps, not just the jobs), and its metrics
+    run as ONE ``.agg`` + collect, every value cast to long. Returns
+    the ``(label, metric, value)`` rows in declared order — the caller
+    wraps them in ``literal_df``."""
+
+    def run(builder, metrics):
+        row = builder(spark, sf_dir).agg(
+            *[
+                c.cast("long").alias(f"m{i}")
+                for i, (_, _, c) in enumerate(metrics)
+            ]
+        ).collect()[0]
+        return [(lab, met, v) for (lab, met, _), v in zip(metrics, row)]
+
+    done = fan_out([partial(run, b, m) for b, m in blocks])
+    return [r for rows in done for r in rows]
 
 
 def with_rank_targets(df, key, tiebreaks, rank_sqls, nb: int = 64):

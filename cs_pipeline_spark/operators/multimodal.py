@@ -47,6 +47,7 @@ from pyspark.sql.types import (
 )
 
 from cs_pipeline_spark.operators.helpers import (
+    agg_report,
     dround,
     literal_df,
     with_prefix_agg,
@@ -1126,26 +1127,9 @@ def mm_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cs_pipeline_spark.sources.webp import mm_decode_webp_meta
 
-    # sub-builder CALLS run inside the pool workers below (their
-    # registered wrappers push their own pin-stack keys per thread —
-    # the r10 thread-local-pin convention), so plan construction of
-    # the 14 decoders overlaps too, not just their jobs.
-    wav, energy, jdc, dh = (
-        mm_decode_wav, mm_audio_energy, mm_decode_jpeg_dc, mm_image_dhash
-    )
-    gif, webp, gps, flac = (
-        mm_decode_gif_meta, mm_decode_webp_meta, mm_exif_gps,
-        mm_decode_flac_meta,
-    )
-    trim, mp4, gop, hevc = (
-        mm_audio_silence_trim, mm_decode_mp4_meta, mm_video_keyframes,
-        mm_video_hevc_meta,
-    )
-    prov, id3 = mm_png_provenance, mm_id3_tags
-
     # ONE aggregate per decoder (the lake_audit_e2e rationale, guide
     # §1.2), and — r11, guide §2.6 — the 14 independent decode+agg
-    # jobs run CONCURRENTLY from a thread pool at build time instead
+    # jobs run CONCURRENTLY via agg_report at build time instead
     # of sequentially inside one union action: each job's decode tail
     # back-fills cores freed by the others, so cold ≈ max(decoder)
     # instead of Σ. The 26 bounded (modality, metric, value) rows are
@@ -1155,91 +1139,77 @@ def mm_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench evicts the memoized plan before each timed run), nothing
     # persists across invocations. The cast(value as long) matches the
     # previous stack() unpivot bit-for-bit; same 26 rows/labels/values.
-    def block(builder, metrics) -> list:
-        agg = builder(spark, sf_dir).agg(
-            *[
-                c.cast("long").alias(f"m{i}")
-                for i, (_, _, c) in enumerate(metrics)
-            ]
-        )
-        row = agg.collect()[0]
-        return [
-            (mod, met, row[f"m{i}"])
-            for i, (mod, met, _) in enumerate(metrics)
-        ]
-
+    # agg_report calls each sub-builder inside its worker, so plan
+    # construction of the 14 decoders overlaps too, not just the jobs.
     blocks = [
-        (wav, [
+        (mm_decode_wav, [
             ("audio", "n_clips", F.count(F.lit(1))),
             ("audio", "total_ms", F.sum("duration_ms")),
         ]),
-        (energy, [
+        (mm_audio_energy, [
             ("audio", "silent_frames", F.sum("is_silence")),
             ("audio", "voiced_frames", F.sum(1 - F.col("is_silence"))),
         ]),
-        (jdc, [
+        (mm_decode_jpeg_dc, [
             ("image", "n_jpeg", F.count(F.lit(1))),
             ("image", "blank_jpeg", F.sum("is_blank")),
         ]),
-        (dh, [
+        (mm_image_dhash, [
             ("image", "near_dup_pairs",
              F.count(
                  F.when(F.col("hamming") <= _DHASH_DUP_T, F.lit(1))
              )),
             ("image", "compared_pairs", F.count(F.lit(1))),
         ]),
-        (gif, [
+        (mm_decode_gif_meta, [
             ("image", "gif_frames", F.sum("n_frames")),
             ("image", "gif_anim_ms", F.sum("total_delay_cs") * 10),
         ]),
-        (webp, [
+        (mm_decode_webp_meta, [
             ("image", "webp_alpha", F.sum("has_alpha")),
         ]),
-        (gps, [
+        (mm_exif_gps, [
             ("privacy", "gps_tagged", F.sum("has_gps")),
         ]),
-        (flac, [
+        (mm_decode_flac_meta, [
             ("audio", "flac_clips", F.count(F.lit(1))),
             ("audio", "flac_ms", F.sum("duration_ms")),
         ]),
-        (trim, [
+        (mm_audio_silence_trim, [
             ("audio", "trimmed_windows",
              F.sum(
                  F.col("leading_silence") + F.col("trailing_silence")
              )),
             ("audio", "kept_windows", F.sum("kept_windows")),
         ]),
-        (mp4, [
+        (mm_decode_mp4_meta, [
             ("video", "n_clips", F.count(F.lit(1))),
             ("video", "total_ms", F.sum("duration_ms")),
         ]),
-        (gop, [
+        (mm_video_keyframes, [
             ("video", "keyframes", F.count(F.lit(1))),
             ("video", "gop_bytes", F.sum("gop_bytes")),
         ]),
-        (hevc, [
+        (mm_video_hevc_meta, [
             ("video", "hevc_clips", F.count(F.lit(1))),
             ("video", "hevc_10bit",
              F.sum(F.when(F.col("bit_depth") == 10, 1).otherwise(0))),
         ]),
-        (prov, [
+        (mm_png_provenance, [
             ("provenance", "ai_generated", F.sum("ai_generated")),
             ("provenance", "text_chunks",
              F.sum(
                  F.col("n_text") + F.col("n_ztxt") + F.col("n_itxt")
              )),
         ]),
-        (id3, [
+        (mm_id3_tags, [
             ("provenance", "tagged_tracks", F.count(F.lit(1))),
             ("provenance", "distinct_artists",
              F.countDistinct("artist")),
         ]),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=10) as ex:
-        futs = [ex.submit(block, builder, m) for builder, m in blocks]
-        rows = [r for f in futs for r in f.result()]
     return literal_df(
-        spark, rows, "modality string, metric string, value long"
+        spark,
+        agg_report(spark, sf_dir, blocks),
+        "modality string, metric string, value long",
     )

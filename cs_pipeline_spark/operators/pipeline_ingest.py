@@ -21,10 +21,13 @@ flagship adds only 1-row aggregates and a union. This is the funnel a
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cs_pipeline_spark.registry import register
+from cs_pipeline_spark.operators.helpers import agg_report, literal_df
+from cs_pipeline_spark.registry import fan_out, pin, register
 
 _MOD = 10  # = dedup._INC_BATCH_MOD = similarity._IVF_BATCH_MOD
 
@@ -120,7 +123,6 @@ def ingest_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim_ivf_incremental,
         sim_ivf_retrain,
     )
-    from cs_pipeline_spark.registry import pin
     from cs_pipeline_spark.tables import load
 
     emb = load(spark, "embeddings", sf_dir)
@@ -128,30 +130,23 @@ def ingest_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from each (pairs feeds 4 branches) — without the pin every
     # branch re-executes the full LSH/IVF pipeline.
     # The three index builds are INDEPENDENT (different persisted
-    # artifacts, no shared state beyond the memoized scan), so their
-    # build-time work and cache materialization overlap from a small
-    # thread pool (guide §2.6: back-fill idle executors with the next
-    # independent job). Each registered sub-builder pushes its own
-    # pin-stack key in its worker thread, so internal pins still tie
-    # to the right LRU entries; the outer pins below tie to this
-    # flagship's entry exactly as before.
-    from concurrent.futures import ThreadPoolExecutor
+    # artifacts, no shared state beyond the memoized scan), so each
+    # build + pin + cache materialization runs as one fan_out call
+    # (guide §2.6: back-fill idle executors with the next independent
+    # job); the pins tie to this flagship's entry.
+    def pinned(fn):
+        df = pin(fn(spark, sf_dir))
+        df.count()
+        return df
 
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        futs = [
-            ex.submit(fn, spark, sf_dir)
+    pairs, search, retrain = fan_out(
+        [
+            partial(pinned, fn)
             for fn in (
-                dedup_lsh_incremental,
-                sim_ivf_incremental,
-                sim_ivf_retrain,
+                dedup_lsh_incremental, sim_ivf_incremental, sim_ivf_retrain
             )
         ]
-        # pin on THIS thread (the pin stack is thread-local — in a
-        # worker it would be empty and pin() degrades to a no-op),
-        # then materialize the three caches concurrently
-        pairs, search, retrain = (pin(f.result()) for f in futs)
-        for _ in ex.map(lambda d: d.count(), (pairs, search, retrain)):
-            pass
+    )
 
     is_b = lambda c: F.col(c) % _MOD == 0  # noqa: E731
     dup_vecs = (
@@ -165,42 +160,32 @@ def ingest_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # r11 (the mm_curate_e2e shape, guide §2.6): the eight funnel
+    # r11 (the mm_curate_e2e shape, guide §2.6): the seven funnel
     # aggregates run as concurrent jobs over the already-pinned stage
     # outputs and the bounded 8-row report returns as a literal
     # relation — admitted = batch − dup_vectors is exact driver
     # integer arithmetic, identical to the crossJoin-subtract branch.
-    from cs_pipeline_spark.operators.helpers import literal_df
-
-    def lval(df, agg):
-        r = df.agg(agg.cast("long").alias("value")).collect()[0]
-        return r["value"]
-
-    with ThreadPoolExecutor(max_workers=7) as ex:
-        f_batch = ex.submit(
-            lambda: emb.filter(is_b("vec_id")).count()
-        )
-        f_pairs = ex.submit(pairs.count)
-        f_dup = ex.submit(dup_vecs.count)
-        f_search = ex.submit(search.count)
-        f_bn = ex.submit(
-            lambda: search.filter(is_b("neighbor_id")).count()
-        )
-        f_shift = ex.submit(lval, retrain, F.max("shift_scaled"))
-        f_moved = ex.submit(
-            lval, retrain, F.sum(F.abs(F.col("n_after") - F.col("n_before")))
-        )
-        batch_v, dup_v = f_batch.result(), f_dup.result()
-        rows = [
-            ("batch", "vectors", batch_v),
-            ("dedup", "dup_pairs", f_pairs.result()),
-            ("dedup", "dup_vectors", dup_v),
-            ("dedup", "admitted", batch_v - dup_v),
-            ("search", "results", f_search.result()),
-            ("search", "batch_neighbors", f_bn.result()),
-            ("retrain", "max_shift_scaled", f_shift.result()),
-            ("retrain", "moved_abs", f_moved.result()),
-        ]
+    n = F.count(F.lit(1))
+    moved = F.sum(F.abs(F.col("n_after") - F.col("n_before")))
+    rows = agg_report(
+        spark,
+        sf_dir,
+        [
+            (lambda *_, df=df: df, [(stage, metric, agg)])
+            for df, stage, metric, agg in (
+                (emb.filter(is_b("vec_id")), "batch", "vectors", n),
+                (pairs, "dedup", "dup_pairs", n),
+                (dup_vecs, "dedup", "dup_vectors", n),
+                (search, "search", "results", n),
+                (search.filter(is_b("neighbor_id")), "search",
+                 "batch_neighbors", n),
+                (retrain, "retrain", "max_shift_scaled",
+                 F.max("shift_scaled")),
+                (retrain, "retrain", "moved_abs", moved),
+            )
+        ],
+    )
+    rows.insert(3, ("dedup", "admitted", rows[0][2] - rows[2][2]))
     return literal_df(
         spark, rows, "stage string, metric string, value long"
     )
@@ -370,14 +355,9 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: no pins — each input feeds exactly ONE aggregate job (the
     # stack rewrite already folded the per-metric branches), so the
-    # cache write was pure cold overhead; sub-builder calls happen in
-    # the pool workers below so the 9 decode plans construct and run
-    # concurrently (guide §2.6).
-    pq, av, dl = scan_parquet_footer, scan_avro_blocks, scan_delta_log
-    ic, pp, oc = (
-        scan_iceberg_manifest, scan_parquet_data_pages, scan_orc_postscript
-    )
-    hu, dv, idl = scan_hudi_timeline, scan_delta_dv, scan_iceberg_deletes
+    # cache write was pure cold overhead; agg_report calls the
+    # sub-builders in its workers so the 9 decode plans construct and
+    # run concurrently (guide §2.6).
 
     # ONE aggregate per input + stack() unpivot (guide §1.2 — fewer
     # passes): the previous shape ran one aggregate BRANCH per metric
@@ -389,19 +369,6 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equal versions fall back to max metric, which is exactly what
     # MAX over the version-filtered rows returned). 25 output rows,
     # same labels, same values.
-    def block(builder, metrics) -> list:
-        agg = builder(spark, sf_dir).agg(
-            *[
-                c.cast("long").alias(f"m{i}")
-                for i, (_, _, c) in enumerate(metrics)
-            ]
-        )
-        row = agg.collect()[0]
-        return [
-            (lay, met, row[f"m{i}"])
-            for i, (lay, met, _) in enumerate(metrics)
-        ]
-
     def at_head(version_col: str, metric_col: str) -> F.Column:
         return F.max(F.struct(F.col(version_col), F.col(metric_col)))[
             metric_col
@@ -409,18 +376,18 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     dl_head = at_head("version", "n_live_files")
     blocks = [
-        (pq, [
+        (scan_parquet_footer, [
             ("parquet", "row_groups", F.count(F.lit(1))),
             ("parquet", "rows", F.sum("num_rows")),
             ("parquet", "non_snappy_chunks",
              F.sum(F.col("n_chunks") - F.col("n_snappy_chunks"))),
         ]),
-        (av, [
+        (scan_avro_blocks, [
             ("avro", "blocks", F.sum("n_blocks")),
             ("avro", "rows", F.sum("n_rows")),
             ("avro", "deflate_files", F.sum("deflate")),
         ]),
-        (dl, [
+        (scan_delta_log, [
             ("log", "versions", F.count(F.lit(1))),
             ("log", "live_files_head", dl_head),
             ("log", "net_file_growth",
@@ -428,14 +395,14 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.when(F.col("version") == 0, F.col("n_live_files"))
              )),
         ]),
-        (ic, [
+        (scan_iceberg_manifest, [
             ("iceberg", "snapshots", F.count(F.lit(1))),
             ("iceberg", "live_files_head",
              at_head("snapshot_id", "n_live_files")),
             ("iceberg", "live_records_head",
              at_head("snapshot_id", "live_records")),
         ]),
-        (pp, [
+        (scan_parquet_data_pages, [
             ("parquet", "rows_page_verified",
              F.sum(
                  F.when(F.col("rows_match") == 1, F.col("rows_decoded"))
@@ -444,20 +411,20 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("parquet", "page_mismatch_files",
              F.sum(1 - F.col("rows_match"))),
         ]),
-        (oc, [
+        (scan_orc_postscript, [
             ("orc", "files", F.count(F.lit(1))),
             ("orc", "rows", F.sum("n_rows")),
             ("orc", "stripe_mismatch_files",
              F.sum(1 - F.col("rows_match"))),
         ]),
-        (hu, [
+        (scan_hudi_timeline, [
             ("hudi", "instants", F.count(F.lit(1))),
             ("hudi", "file_groups_head",
              at_head("instant", "n_file_groups")),
             ("hudi", "records_head",
              at_head("instant", "total_records")),
         ]),
-        (dv, [
+        (scan_delta_dv, [
             ("dv", "files_with_dv",
              F.sum(
                  F.when(F.col("dv_cardinality") > 0, 1).otherwise(0)
@@ -465,20 +432,15 @@ def lake_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("dv", "deleted_rows", F.sum("dv_cardinality")),
             ("dv", "live_rows", F.sum("live_rows")),
         ]),
-        (idl, [
+        (scan_iceberg_deletes, [
             ("iceberg", "pos_deletes_applied", F.sum("n_pos_deletes")),
             ("iceberg", "mor_live_rows", F.sum("live_rows")),
         ]),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    from cs_pipeline_spark.operators.helpers import literal_df
-
-    with ThreadPoolExecutor(max_workers=9) as ex:
-        futs = [ex.submit(block, builder, m) for builder, m in blocks]
-        rows = [r for f in futs for r in f.result()]
     return literal_df(
-        spark, rows, "layer string, metric string, value long"
+        spark,
+        agg_report(spark, sf_dir, blocks),
+        "layer string, metric string, value long",
     )
 
 
@@ -632,49 +594,27 @@ def wire_formats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11 (the mm_curate_e2e / lake_audit_e2e shape, guide §2.6): no
     # pins (each input feeds exactly ONE aggregate job), sub-builders
-    # called inside the pool workers, ten concurrent aggregate jobs,
-    # bounded 28-row literal report. Same rows, labels, values.
-    ar, ast, mp, zl, xz = (
-        scan_arrow_ipc, scan_arrow_stream, scan_msgpack_records,
-        scan_deflate_streams, scan_xz_container,
-    )
-    sq, gz, cb, tor, zc = (
-        scan_sqlite_db, scan_gzip_headers, scan_cbor_records,
-        scan_torrent_manifest, scan_zip_central_dir,
-    )
-
-    def block(builder, metrics) -> list:
-        agg = builder(spark, sf_dir).agg(
-            *[
-                c.cast("long").alias(f"m{i}")
-                for i, (_, _, c) in enumerate(metrics)
-            ]
-        )
-        row = agg.collect()[0]
-        return [
-            (fmt, met, row[f"m{i}"])
-            for i, (fmt, met, _) in enumerate(metrics)
-        ]
-
+    # called inside agg_report's workers, ten concurrent aggregate
+    # jobs, bounded 28-row literal report. Same rows, labels, values.
     blocks = [
-        (ar, [
+        (scan_arrow_ipc, [
             ("arrow", "files", F.count(F.lit(1))),
             ("arrow", "batches", F.sum("n_batches")),
             ("arrow", "rows", F.sum("n_rows")),
             ("arrow", "nulls", F.sum("n_nulls")),
         ]),
-        (mp, [
+        (scan_msgpack_records, [
             ("msgpack", "files", F.count(F.lit(1))),
             ("msgpack", "records", F.sum("n_records")),
             ("msgpack", "nil_flags", F.sum("n_nil")),
             ("msgpack", "blob_bytes", F.sum("blob_bytes")),
         ]),
-        (zl, [
+        (scan_deflate_streams, [
             ("zlib", "files", F.count(F.lit(1))),
             ("zlib", "streams", F.sum("n_streams")),
             ("zlib", "out_bytes", F.sum("out_len")),
         ]),
-        (xz, [
+        (scan_xz_container, [
             ("xz", "files", F.count(F.lit(1))),
             ("xz", "blocks", F.sum("n_blocks")),
             ("xz", "out_bytes", F.sum("out_len")),
@@ -683,39 +623,34 @@ def wire_formats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("n_crc32") + F.col("n_crc64") + F.col("n_sha256")
              )),
         ]),
-        (ast, [
+        (scan_arrow_stream, [
             ("arrow_stream", "batches", F.sum("n_batches")),
             ("arrow_stream", "rows", F.sum("n_rows")),
         ]),
-        (sq, [
+        (scan_sqlite_db, [
             ("sqlite", "tables", F.sum("n_tables")),
             ("sqlite", "rows", F.sum("n_rows")),
         ]),
-        (gz, [
+        (scan_gzip_headers, [
             ("gzip", "members", F.sum("n_members")),
             ("gzip", "out_bytes", F.sum("out_len")),
             ("gzip", "named_chars", F.sum("name_chars")),
         ]),
-        (cb, [
+        (scan_cbor_records, [
             ("cbor", "records", F.sum("n_records")),
             ("cbor", "indefinite_items", F.sum("n_indef")),
         ]),
-        (tor, [
+        (scan_torrent_manifest, [
             ("torrent", "pieces", F.sum("n_pieces")),
             ("torrent", "pieces_verified", F.sum("pieces_ok")),
         ]),
-        (zc, [
+        (scan_zip_central_dir, [
             ("zip", "members", F.sum("n_members")),
             ("zip", "crc_verified", F.sum("crc_ok")),
         ]),
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    from cs_pipeline_spark.operators.helpers import literal_df
-
-    with ThreadPoolExecutor(max_workers=10) as ex:
-        futs = [ex.submit(block, builder, m) for builder, m in blocks]
-        rows = [r for f in futs for r in f.result()]
     return literal_df(
-        spark, rows, "format string, metric string, value long"
+        spark,
+        agg_report(spark, sf_dir, blocks),
+        "format string, metric string, value long",
     )

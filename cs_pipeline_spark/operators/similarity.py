@@ -1427,10 +1427,9 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # top-pool via orderBy+limit → TakeOrderedAndProject (per-partition
     # heap over the corpus, no single-partition rank window)
-    pool = (
-        scored.orderBy(F.col("rel").desc(), F.col("vec_id"))
-        .limit(_MMR_POOL)
-        .persist()  # referenced 2+2k times across the unrolled rounds
+    # pinned: referenced 2+2k times across the unrolled rounds
+    pool = pin(
+        scored.orderBy(F.col("rel").desc(), F.col("vec_id")).limit(_MMR_POOL)
     )
     a = pool.select(
         F.col("vec_id").alias("av"),
@@ -1442,16 +1441,15 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("b_emb"),
         F.col("nrm").alias("b_nrm"),
     )
-    simmat = (
-        a.join(b, F.col("av") != F.col("bv"))
-        .select(
+    # pinned: P×P rows, reused every round
+    simmat = pin(
+        a.join(b, F.col("av") != F.col("bv")).select(
             "av",
             "bv",
             _scored(
                 F.col("a_emb"), F.col("b_emb"), F.col("a_nrm"), F.col("b_nrm")
             ).alias("sim"),
         )
-        .persist()  # P×P rows, reused every round
     )
     lam = F.lit(_MMR_LAMBDA)
     mu = F.lit(round(1 - _MMR_LAMBDA, 10))

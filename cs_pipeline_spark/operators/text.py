@@ -1502,78 +1502,6 @@ def text_bpe_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_bpe_train3",
-    f"""
-    WITH {_BPE_WC_SQL},
-    sp0 AS MATERIALIZED (
-      SELECT ' ' || trim(regexp_replace(w, '(.)', '\\1  ', 'g')) || ' '
-               AS s, wn FROM wc),
-    p1 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp0),
-    t1 AS MATERIALIZED (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n
-      FROM p1 GROUP BY pair ORDER BY n DESC, pair LIMIT 1),
-    sp1 AS MATERIALIZED (
-      SELECT replace(s, ' ' || replace(t1.pair, ' ', '  ') || ' ',
-                     ' ' || replace(t1.pair, ' ', '') || ' ') AS s, wn
-      FROM sp0, t1),
-    p2 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp1),
-    t2 AS MATERIALIZED (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n
-      FROM p2 GROUP BY pair ORDER BY n DESC, pair LIMIT 1),
-    sp2 AS MATERIALIZED (
-      SELECT replace(s, ' ' || replace(t2.pair, ' ', '  ') || ' ',
-                     ' ' || replace(t2.pair, ' ', '') || ' ') AS s, wn
-      FROM sp1, t2),
-    p3 AS (SELECT wn, unnest(list_transform(
-             range(1, greatest(len(string_split(trim(s), '  ')) - 1, 0) + 1),
-             i -> string_split(trim(s), '  ')[CAST(i AS INT)] || ' ' ||
-                  string_split(trim(s), '  ')[CAST(i AS INT) + 1])) AS pair
-           FROM sp2),
-    t3 AS (SELECT pair, CAST(SUM(wn) AS BIGINT) AS n
-      FROM p3 GROUP BY pair ORDER BY n DESC, pair LIMIT 1)
-    SELECT CAST(1 AS BIGINT) AS step, pair AS merged, n FROM t1
-    UNION ALL SELECT CAST(2 AS BIGINT), pair, n FROM t2
-    UNION ALL SELECT CAST(3 AS BIGINT), pair, n FROM t3
-    """,
-    doc="BPE tokenizer training, 3 full iterations in-engine: the "
-    "ordered merge table (step, merged pair, frequency at selection "
-    "time) — mixed-width symbols round 2+, boundary-safe rewrite "
-    "(double-space separators + sentinels so a merged token can never "
-    "match the tail of a longer symbol)",
-)
-def text_bpe_train3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three BPE training iterations (Sennrich et al. 2016), the loop
-    the single-step ops unroll. Word types are rewritten between
-    rounds as sentinel-wrapped, double-space-separated symbol strings:
-    the search pattern ``' a  b '`` can only match whole adjacent
-    symbols (never the tail of a longer symbol like ``ter``), and the
-    single-space replacement ``' ab '`` restores both separators, so
-    adjacent occurrences sharing a boundary still merge in one
-    leftmost-non-overlapping pass — exactly the BPE greedy rule.
-
-    Each round's argmax is a 1-row frame cross-joined back (lazy,
-    deterministic n-desc/pair-asc tie-break); the symbol-string frame
-    is referenced twice per round (argmax + rewrite), so rounds are
-    cut with ``localCheckpoint`` on Spark and ``AS MATERIALIZED`` in
-    the oracle (the iterative-op convention — plans would double per
-    round otherwise).
-
-    Scale: all state is word TYPES (Zipf-bounded) × a ≤3-row merge
-    table; pair counting is one map-side-combined aggregate per round.
-    Real BPE training (k≈30000 merges) runs this exact shape with the
-    merge table growing by one row per round.
-    """
-
-    return _bpe_train(spark, sf_dir, 3)
-
-
 # ---------- N-round BPE training (the depth-general loop) ----------
 
 _BPE_TRAIN_N = 8
@@ -1591,8 +1519,8 @@ def _bpe_pair_cte(k: int, src: str) -> str:
 
 
 def _bpe_train_sql(n: int) -> str:
-    """Generate the n-round merge-chain oracle — the hand-written
-    train3 SQL produced by a loop. Every intermediate is
+    """Generate the n-round merge-chain oracle (text_bpe_train3 and
+    text_bpe_train8 register it at depth 3 and 8). Every intermediate is
     AS MATERIALIZED (the graph_k_core rule): DuckDB otherwise inlines
     each round's CTE into BOTH its downstream references and the
     chain re-derives 2^n times."""
@@ -1626,6 +1554,41 @@ def _bpe_train_sql(n: int) -> str:
         for k in range(1, n + 1)
     )
     return "WITH " + ", ".join(ctes) + " " + union
+
+
+@register(
+    "text_bpe_train3",
+    _bpe_train_sql(3),
+    doc="BPE tokenizer training, 3 full iterations in-engine: the "
+    "ordered merge table (step, merged pair, frequency at selection "
+    "time) — mixed-width symbols round 2+, boundary-safe rewrite "
+    "(double-space separators + sentinels so a merged token can never "
+    "match the tail of a longer symbol)",
+)
+def text_bpe_train3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Three BPE training iterations (Sennrich et al. 2016), the loop
+    the single-step ops unroll. Word types are rewritten between
+    rounds as sentinel-wrapped, double-space-separated symbol strings:
+    the search pattern ``' a  b '`` can only match whole adjacent
+    symbols (never the tail of a longer symbol like ``ter``), and the
+    single-space replacement ``' ab '`` restores both separators, so
+    adjacent occurrences sharing a boundary still merge in one
+    leftmost-non-overlapping pass — exactly the BPE greedy rule.
+
+    Each round's argmax is a 1-row frame cross-joined back (lazy,
+    deterministic n-desc/pair-asc tie-break); the symbol-string frame
+    is referenced twice per round (argmax + rewrite), so rounds are
+    cut with ``localCheckpoint`` on Spark and ``AS MATERIALIZED`` in
+    the oracle (the iterative-op convention — plans would double per
+    round otherwise).
+
+    Scale: all state is word TYPES (Zipf-bounded) × a ≤3-row merge
+    table; pair counting is one map-side-combined aggregate per round.
+    Real BPE training (k≈30000 merges) runs this exact shape with the
+    merge table growing by one row per round.
+    """
+
+    return _bpe_train(spark, sf_dir, 3)
 
 
 def _bpe_train(spark: SparkSession, sf_dir: str, n_rounds: int) -> DataFrame:

@@ -14,6 +14,7 @@ from __future__ import annotations
 import threading
 from collections import OrderedDict
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +72,51 @@ def pin(df: DataFrame, level=None) -> DataFrame:
     return out
 
 
+_FAN_OUT_MAX = 10  # driver threads per fan_out() call; see its docstring
+
+
+def fan_out(calls: list[Callable[[], object]]) -> list:
+    """Run zero-argument callables concurrently from the driver and
+    return their results in order; the first failing call's exception
+    (in list order) is re-raised once every call has finished (the
+    pool's exit waits for the rest).
+
+    The width, ``min(len(calls), _FAN_OUT_MAX)``, bounds driver-side
+    job SUBMISSION only: each call typically builds a plan and runs
+    its jobs, and executor parallelism stays Spark's (the scheduler
+    interleaves the submitted jobs' tasks on the executors' cores).
+    What the threads overlap is py4j plan construction and the
+    per-job scheduling latency of many small independent jobs. The cap
+    is 10 because width 14 measured slower than 10 on mm_curate_e2e's
+    14 decode+aggregate jobs (1.79 s vs 1.37-1.66 s cold,
+    OPTIMIZATION_r11.md "Measured and rejected"): past ~10 concurrent
+    builds the driver's GIL/py4j contention dominates.
+
+    Each worker starts with a copy of the caller's pin stack, so
+    ``pin()`` inside a call ties its blocks to the caller's LRU entry
+    exactly as on the calling thread."""
+    if not calls:
+        return []
+    parent = list(getattr(_PIN_STACK, "s", None) or [])
+
+    def run(call):
+        _PIN_STACK.s = list(parent)
+        return call()
+
+    with ThreadPoolExecutor(min(len(calls), _FAN_OUT_MAX)) as ex:
+        return list(ex.map(run, calls))
+
+
+def _release(dfs, blocking: bool = False) -> None:
+    """Unpersist each frame, best effort: one failure must not keep
+    the others cached."""
+    for df in dfs:
+        try:
+            df.unpersist(blocking=blocking)  # no-op if never persisted
+        except Exception:
+            pass
+
+
 def _lru_get(key: tuple) -> DataFrame | None:
     with _PLAN_LOCK:
         df = _PLAN_LRU.get(key)
@@ -88,11 +134,7 @@ def _lru_put(key: tuple, df: DataFrame) -> None:
             old_key, old_df = _PLAN_LRU.popitem(last=False)
             evicted.append(old_df)
             evicted.extend(_PINNED.pop(old_key, []))
-    for old in evicted:
-        try:
-            old.unpersist(blocking=False)  # no-op if never persisted
-        except Exception:
-            pass
+    _release(evicted)
 
 
 @dataclass(frozen=True)
@@ -150,11 +192,7 @@ def register(name: str, oracle: str | None, doc: str = ""):
                     # builder already pinned — unpersist them now
                     with _PLAN_LOCK:
                         orphans = _PINNED.pop(key, [])
-                    for o in orphans:
-                        try:
-                            o.unpersist(blocking=False)
-                        except Exception:
-                            pass
+                    _release(orphans)
                     raise
                 finally:
                     stack.pop()
@@ -192,11 +230,7 @@ def evict(
     with _PLAN_LOCK:
         df = _PLAN_LRU.pop(key, None)
         pinned = _PINNED.pop(key, [])
-    for old in ([df] if df is not None else []) + pinned:
-        try:
-            old.unpersist(blocking=blocking)
-        except Exception:
-            pass
+    _release(([df] if df is not None else []) + pinned, blocking)
     return df is not None
 
 

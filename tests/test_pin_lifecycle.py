@@ -81,3 +81,58 @@ def test_pinned_builders_still_hash_correct(spark, sf_dir):
     first = sorted(map(tuple, q["ml_decision_stump"](spark, sf_dir).collect()))
     again = sorted(map(tuple, q["ml_decision_stump"](spark, sf_dir).collect()))
     assert first == again
+
+
+def test_sim_mmr_rerank_evict_releases_its_caches(spark, sf_dir):
+    """sim_mmr_rerank caches its relevance pool and P×P sim matrix;
+    both must go with the op's LRU entry, so every RDD the build
+    cached is gone after a blocking evict. Its per-round
+    localCheckpoint RDDs are not caches: evict cannot release them
+    without breaking live plans built on them (ROADMAP item 5), and
+    ContextCleaner reclaims them."""
+    from cs_pipeline_spark.operators.similarity import sim_mmr_rerank
+
+    jsc = spark.sparkContext._jsc
+
+    def cached_rdds():
+        m = jsc.getPersistentRDDs()
+        return {k for k in m.keys() if not m[k].rdd().isLocallyCheckpointed()}
+
+    registry.evict("sim_mmr_rerank", spark, sf_dir, blocking=True)
+    before = cached_rdds()
+    assert sim_mmr_rerank(spark, sf_dir).collect()
+    assert cached_rdds() - before  # the pins are live while memoized
+    assert registry.evict("sim_mmr_rerank", spark, sf_dir, blocking=True)
+    assert not cached_rdds() - before
+
+
+def test_no_raw_persist_outside_pin():
+    """Structural guard: a raw .persist()/.cache() on an intermediate
+    outlives its builder's eviction (the round-2 OOM class), so the
+    package persists only through registry.pin."""
+    import ast
+    import pathlib
+
+    import cs_pipeline_spark
+
+    root = pathlib.Path(cs_pipeline_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path == root / "registry.py":
+            pin = next(
+                n
+                for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "pin"
+            )
+            allowed = set(range(pin.lineno, pin.end_lineno + 1))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+                and node.lineno not in allowed
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, offenders
